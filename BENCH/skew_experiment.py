@@ -4,7 +4,7 @@ and without the salted repartition (plans/skew.py).
 
 Setup: the pages table is written hash-partitioned BY HOST, so the heavy
 host (30% of all urls, FIXTURES.md §1) lands in ONE input file.  The
-no-shuffle plan (JobConfig.repartition=False) inherits that layout — one
+no-shuffle plan (extract on the scan partitions) inherits that layout — one
 straggler task does 30% of the work while 31 cores idle.  The salted
 repartition re-keys by xxhash64(url [, salt]) and balances.
 

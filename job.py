@@ -9,15 +9,15 @@ packaging contract):
 Local library use needs no zip (job/packaging.py self-ships).
 
 Modes:
-  --input DIR           read a stored pages parquet/Iceberg table
+  --input DIR           read a stored pages parquet table
   --input-format warc   treat --input as a tree of .warc[.gz] segments
                         (Common Crawl layout) instead of parquet
   --synthetic SF_DIR    build the deterministic pages table from a
                         testdata documents parquet (fixtures/bench)
   --streaming           run the Structured Streaming variant instead
-                        (micro-batch trigger = the reference's 2-min poll;
-                        combines with --input-format warc to stream raw
-                        crawl segments as they land)
+                        (each micro-batch runs the batch job as epoch-N;
+                        drains what has landed and stops; combines with
+                        --input-format warc to stream raw crawl segments)
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """MERGE-semantics twin: the checkpoint protocol on a SECOND backend.
 
-The production sink is ``MERGE INTO`` on Iceberg (io/catalog.py
-``IcebergCatalog.write_batch``; reference analog: the DB append in
+On a MERGE-capable table format the sink is ``MERGE INTO`` (io/catalog.py
+``MERGE_SQL``; reference analog: the DB append in
 ``/root/reference/TextExtraction/Services/DbHelper.cs:31-36`` plus the
 move-as-commit in ``Worker.cs:529``).  This image carries no Iceberg
 jars, so that path never executes — this test pins the SAME commit

@@ -108,6 +108,27 @@ class TestSkew:
         assert "heavy.example.com" in plan
         assert plan["heavy.example.com"] >= 2
 
+    def test_salt_plan_collects_only_heavy_hosts(self, pages, monkeypatch):
+        """The heavy-host filter runs before the collect, with no global
+        sort: at 50 rows per task only heavy.example.com, not all 21
+        hosts, reaches the driver."""
+        DataFrame = type(pages)
+        real_collect = DataFrame.collect
+        seen = []
+
+        def spy(df):
+            rows = real_collect(df)
+            seen.append((df, rows))
+            return rows
+
+        monkeypatch.setattr(DataFrame, "collect", spy)
+        plan = salt_plan(pages, rows_per_task=50)
+        monkeypatch.undo()
+        assert len(seen) == 1
+        df, rows = seen[0]
+        assert [r["host"] for r in rows] == list(plan) == ["heavy.example.com"]
+        assert "Sort" not in df._jdf.queryExecution().optimizedPlan().toString()
+
     def test_salted_partitions_bounded(self, spark, pages):
         """With host+salt keys, no partition holds the whole heavy host."""
         import pyspark.sql.functions as F
@@ -181,35 +202,27 @@ class TestCheckpointResume:
 
 
 class TestKernelPathParity:
-    def test_arrow_and_pandas_kernels_identical(self, spark):
-        """mapInArrow (default) and mapInPandas twin produce identical
-        results — full-column comparison at sf0.001."""
-        from textextraction_spark.job.extract import extract_pages
-        from textextraction_spark.sources.pages import build_pages
+    def test_arrow_kernel_matches_in_driver_kernel(self, spark, pages):
+        """The mapInArrow kernel returns, for every sf0.001 row, exactly
+        what the in-driver ``extract_document`` returns for the same
+        bytes: text, confidence, n_lines, is_pdf, error and every field
+        of every span, in order."""
+        from textextraction_spark.core.extract import extract_document
 
-        pages = build_pages(spark, "/root/testdata/sf0.001")
-        cols = ["url", "extracted_text", "confidence", "n_lines", "is_pdf", "error"]
-        a = extract_pages(pages, use_arrow=True).select(*cols).orderBy("url").toPandas()
-        b = extract_pages(pages, use_arrow=False).select(*cols).orderBy("url").toPandas()
-        assert a.equals(b)
-
-        import pyspark.sql.functions as F
-
-        sa = (
-            extract_pages(pages, use_arrow=True)
-            .select(F.explode("spans").alias("s"))
-            .select("s.*")
-            .orderBy("s.text", "s.start")
-            .toPandas()
-        )
-        sb = (
-            extract_pages(pages, use_arrow=False)
-            .select(F.explode("spans").alias("s"))
-            .select("s.*")
-            .orderBy("s.text", "s.start")
-            .toPandas()
-        )
-        assert sa.equals(sb)
+        got = {r["url"]: r for r in extract_pages(pages).collect()}
+        src = pages.select("url", "html").collect()
+        assert len(got) == len(src) == 500
+        fields = ["extracted_text", "confidence", "n_lines", "is_pdf", "error"]
+        n_spans = 0
+        for row in src:
+            want = extract_document(bytes(row["html"] or b""))
+            g = got[row["url"]]
+            for f in fields:
+                assert g[f] == getattr(want, f), (row["url"], f)
+            spans = [vars(s) for s in want.spans]
+            assert [s.asDict() for s in g.spans] == spans, row["url"]
+            n_spans += len(spans)
+        assert n_spans > 0
 
 
 class TestInputDedup:

@@ -1,15 +1,12 @@
 """Robustness at the Spark boundary: Arrow batch caps with multi-MB
-documents, catalog fallback, packaging zip integrity (SURVEY.md §7.4.4/6)."""
+documents, packaging zip integrity (SURVEY.md §7.4.4)."""
 
 from __future__ import annotations
 
 import zipfile
 
 import pyspark.sql.functions as F
-import pytest
 
-from textextraction_spark.io.catalog import get_catalog, iceberg_available
-from textextraction_spark.io.checkpoint import CheckpointCatalog
 from textextraction_spark.job.extract import extract_pages
 from textextraction_spark.job.packaging import build_zip
 
@@ -35,7 +32,7 @@ class TestLargeDocs:
 
     def test_byte_cap_splits_batches(self, spark):
         """spark.sql.execution.arrow.maxBytesPerBatch is the real OOM
-        guard (JobConfig.arrow_max_bytes): with a 64 KB cap, 10 KB rows
+        guard (plans/pipeline.py ARROW_MAX_BYTES): with a 64 KB cap, 10 KB rows
         must arrive in small batches regardless of the record cap."""
         import pyarrow as pa
 
@@ -68,21 +65,6 @@ class TestLargeDocs:
         assert {r["url"]: r["extracted_text"] for r in rows} == {"u1": "", "u2": ""}
 
 
-class TestCatalogFallback:
-    def test_no_iceberg_in_image(self, spark):
-        assert iceberg_available(spark) is False
-
-    def test_factory_falls_back(self, spark, tmp_path):
-        cat = get_catalog(spark, str(tmp_path / "root"))
-        assert isinstance(cat, CheckpointCatalog)
-
-    def test_forced_iceberg_raises_clearly(self, spark, tmp_path):
-        from textextraction_spark.io.catalog import IcebergCatalog
-
-        with pytest.raises(RuntimeError, match="Iceberg extension"):
-            IcebergCatalog(spark, "wh.results")
-
-
 class TestPackaging:
     def test_zip_contains_package_and_resources(self):
         z = build_zip()
@@ -90,3 +72,25 @@ class TestPackaging:
         assert "textextraction_spark/core/extract.py" in names
         assert "textextraction_spark/resources/persons.txt" in names
         assert not any(n.endswith(".pyc") for n in names)
+
+
+class TestWorkerImports:
+    def test_extraction_worker_imports_no_pandas(self):
+        """What an extraction worker imports — pyspark.worker, the Arrow
+        kernel module and the WARC parser — must not import pandas."""
+        import subprocess
+        import sys
+        from pathlib import Path
+
+        code = (
+            "import sys, pyspark.worker, textextraction_spark.job.extract, "
+            "textextraction_spark.sources.warc\n"
+            "assert 'pandas' not in sys.modules, 'pandas imported'\n"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code],
+            cwd=Path(__file__).resolve().parents[1],
+            capture_output=True,
+            text=True,
+        )
+        assert out.returncode == 0, out.stderr

@@ -63,6 +63,44 @@ class TestStreaming:
         assert (m.extracted_text_g == m.extracted_text_w).all()
 
 
+class TestStreamingReplay:
+    def test_replayed_epoch_is_a_no_op(self, spark, tmp_path):
+        """Spark replays an epoch whose offsets it logged but never marked
+        done — here a crash after our commit marker but before Spark's
+        offset commit, simulated by emptying the stream checkpoint's
+        ``commits/``.  The replay must be a no-op: the epoch keeps its
+        results and committed urls, and its WET segments are not
+        re-published (no duplicate cdx-wet rows)."""
+        pages_dir = str(tmp_path / "pages")
+        ckpt = str(tmp_path / "ckpt")
+        sckpt = tmp_path / "sckpt"
+        wet = str(tmp_path / "wet")
+        cdx = str(tmp_path / "wet" / "cdx-wet")
+        _write_pages(spark, pages_dir, limit=200)
+
+        def drain():
+            q = run_streaming_extraction(
+                spark, pages_dir, ckpt, str(sckpt), num_partitions=4, wet_dir=wet
+            )
+            q.awaitTermination(120)
+
+        drain()
+        cat = CheckpointCatalog(ckpt)
+        assert cat.committed_batches() == ["epoch-0"]
+        assert spark.read.parquet(cdx).count() == 200
+
+        for f in (sckpt / "commits").iterdir():
+            f.unlink()
+        drain()
+
+        assert (sckpt / "commits" / "0").exists()  # epoch 0 really ran again
+        assert cat.results(spark).count() == 200
+        assert cat.committed_urls(spark).count() == 200
+        assert spark.read.parquet(cdx).count() == 200
+        # the streaming commit is the batch job's, metrics included
+        assert (tmp_path / "ckpt" / "metrics" / "epoch-0" / "_SUCCESS").exists()
+
+
 class TestStreamingWarc:
     def test_warc_segments_stream_and_commit(self, spark, tmp_path):
         """Raw crawl segments as the STREAM source: segment files arrive

@@ -9,7 +9,7 @@ from datetime import datetime, timezone
 from pyspark.sql import functions as F
 
 from textextraction_spark.job.extract import extract_pages
-from textextraction_spark.sources import build_pages
+from textextraction_spark.sources.pages import build_pages
 from textextraction_spark.sources.warc import (
     cdx_lookup,
     iter_warc_records,

@@ -9,12 +9,13 @@ pipeline, see /root/reference) as stateless, vectorized Spark transforms:
                  extractors, bounded date grammar, gazetteer NER.  This is
                  the single source of truth for extraction semantics, shared
                  by the Spark UDFs, the test oracle, and the golden fixtures.
-- ``job/``       the Spark job: schemas, the ``mapInPandas`` extraction
-                 kernel, and the end-to-end pipeline (scan -> prune ->
-                 checkpoint anti-join -> salted repartition -> extract ->
-                 sink + lineage metrics).
-- ``io/``        catalog/checkpoint abstraction (Iceberg MERGE when jars are
-                 present; local parquet state table + anti-join otherwise).
+- ``job/``       the Spark face of the kernel: schemas, the ``mapInArrow``
+                 extraction operator, executor packaging.
+- ``plans/``     the end-to-end extraction job (scan -> prune -> checkpoint
+                 anti-join -> salted repartition -> extract -> sink +
+                 lineage metrics), the one path batch and streaming share.
+- ``io/``        exactly-once checkpoint (local parquet state + atomic
+                 marker + anti-join resume) and its ``MERGE INTO`` twin.
 - ``operators/`` web-scale training-data operators: dedup (exact, MinHash
                  LSH, SimHash, n-gram Jaccard, embedding near-dup),
                  similarity search (brute-force + LSH-bucketed ANN), text
@@ -23,8 +24,8 @@ pipeline, see /root/reference) as stateless, vectorized Spark transforms:
 - ``sources/``   deterministic Common-Crawl-style ``pages`` table builder
                  (the BASELINE.json input_hint shape) derived from the
                  driver's ``documents`` parquet.
-- ``streaming/`` Structured Streaming variant of the extraction job
-                 (micro-batch trigger, foreachBatch exactly-once commit).
+- ``streaming/`` Structured Streaming variant: every micro-batch runs the
+                 batch extraction job as epoch ``epoch-N``.
 
 Everything here derives from public knowledge only: the Apache Spark /
 PySpark API and the reference repo's observable behavior.

@@ -1,33 +1,24 @@
-"""Catalog abstraction: Iceberg when the runtime has it, local parquet
-checkpoint otherwise — same exactly-once contract either way (SURVEY.md
-§7.0, §7.4.6).
+"""The commit protocol as a ``MERGE INTO`` statement (SURVEY.md §7.0).
 
-On a production cluster (Iceberg jars + a configured catalog) the commit
-protocol maps onto:
+On a cluster with a MERGE-capable table format the checkpoint protocol of
+io/checkpoint.py maps onto:
 
     results:   MERGE INTO results r USING batch b ON r.url = b.url
                WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
-    resume:    pages LEFT ANTI JOIN (SELECT url FROM results) — or Iceberg's
-               incremental snapshot reads
-    atomicity: the Iceberg snapshot commit (optimistic, single swap) replaces
-               the local backend's atomic directory-marker rename.
+    resume:    pages LEFT ANTI JOIN (SELECT url FROM results)
+    atomicity: the table's snapshot commit replaces the local backend's
+               atomic directory-marker rename.
 
-This image has no Iceberg jars (SURVEY.md §7.0), so ``IcebergCatalog`` is
-capability-gated: constructing it without the extension raises a clear
-error, and ``get_catalog`` falls back to the tested local backend.  The
-class body is the documented production shape; its semantics are the SAME
-contract the kill/resume tests pin on the local backend.
+The engine's sink is the local backend (io/checkpoint.py), so the
+statement runs only in the MERGE-semantics twin test
+(tests/test_merge_semantics.py), which pins that backend to the same
+committed set.
 """
 
 from __future__ import annotations
 
-from textextraction_spark.io.checkpoint import CheckpointCatalog
-
-
-# The commit statement, shared verbatim by the Iceberg backend and the
-# MERGE-semantics twin test (tests/test_merge_semantics.py) so the two
-# cannot drift.  Reference analog: the INSERT in DbHelper.cs:31-36 plus
-# the move-as-commit in Worker.cs:529, made exactly-once.
+# Reference analog: the INSERT in DbHelper.cs:31-36 plus the
+# move-as-commit in Worker.cs:529, made exactly-once.
 MERGE_SQL = """
 MERGE INTO {target} r
 USING {source} b ON r.url = b.url
@@ -48,71 +39,3 @@ def merge_expansion_sql(target: str, source: str) -> list[str]:
         f"DELETE FROM {target} WHERE url IN (SELECT url FROM {source})",
         f"INSERT INTO {target} SELECT * FROM {source}",
     ]
-
-
-def iceberg_available(spark) -> bool:
-    """True iff the Iceberg Spark extension is on the classpath."""
-    try:
-        # NB: plain `spark._jvm.org...` attribute access returns a lazy
-        # JavaPackage even for missing classes — Class.forName actually
-        # probes the classpath.
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-class IcebergCatalog:
-    """Iceberg-backed implementation of the checkpoint contract.
-
-    Requires: spark.sql.extensions=org.apache.iceberg.spark.extensions
-    .IcebergSparkSessionExtensions and a configured catalog (e.g.
-    ``spark.sql.catalog.wh=org.apache.iceberg.spark.SparkCatalog``).
-    """
-
-    def __init__(self, spark, table: str) -> None:
-        if not iceberg_available(spark):
-            raise RuntimeError(
-                "Iceberg extension not on the classpath — use "
-                "get_catalog(), which falls back to the local parquet "
-                "CheckpointCatalog with identical semantics"
-            )
-        self.spark = spark
-        self.table = table
-
-    # -- same surface as CheckpointCatalog --------------------------------
-    def committed_urls(self, spark):
-        return spark.read.table(self.table).select("url")
-
-    def results(self, spark):
-        return spark.read.table(self.table)
-
-    def pending(self, pages_df, spark):
-        return pages_df.join(self.committed_urls(spark), "url", "left_anti")
-
-    def write_batch(self, extracted_df, batch_id: str) -> None:
-        """MERGE keyed on url: idempotent re-run of a crashed batch
-        overwrites its own rows; the snapshot commit is the atomic point."""
-        # batch ids like "epoch-3" are not valid SQL identifiers — sanitize,
-        # plus a digest of the RAW id: sanitization alone maps distinct ids
-        # ("epoch-3" / "epoch.3") to one view name, letting two concurrent
-        # merges in one SparkSession clobber each other's temp view.
-        import hashlib
-
-        sanitized = "".join(c if c.isalnum() else "_" for c in batch_id)
-        digest = hashlib.md5(batch_id.encode()).hexdigest()[:8]
-        view = f"_batch_{sanitized}_{digest}"
-        extracted_df.createOrReplaceTempView(view)
-        try:
-            self.spark.sql(MERGE_SQL.format(target=self.table, source=view))
-        finally:
-            # unique per-batch names would otherwise accumulate one
-            # catalog entry per batch for the session's lifetime
-            self.spark.catalog.dropTempView(view)
-
-
-def get_catalog(spark, root_or_table: str, prefer: str = "auto"):
-    """Factory: Iceberg when available (or forced), else local parquet."""
-    if prefer == "iceberg" or (prefer == "auto" and iceberg_available(spark)):
-        return IcebergCatalog(spark, root_or_table)
-    return CheckpointCatalog(root_or_table)

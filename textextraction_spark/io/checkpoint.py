@@ -12,10 +12,10 @@ between insert and move.  We make it exactly-once:
   idempotently (extraction is a pure function, so re-runs are
   byte-identical; readers see only finalized batches).
 
-On a real cluster with Iceberg jars this maps 1:1 onto
-``MERGE INTO results`` + snapshot commit (the catalog abstraction keeps the
-contract identical — SURVEY.md §7.0); locally it is plain parquet + an
-atomic rename, which HDFS/S3A-committers provide equivalently at scale.
+With a MERGE-capable table format this maps 1:1 onto ``MERGE INTO
+results`` + snapshot commit (io/catalog.py ``MERGE_SQL`` — SURVEY.md
+§7.0); here it is plain parquet + an atomic rename, which
+HDFS/S3A-committers provide equivalently at scale.
 """
 
 from __future__ import annotations

@@ -1,21 +1,19 @@
-"""The vectorized extraction operator: Arrow-batched ``mapInArrow`` (default)
-with a ``mapInPandas`` twin.
+"""The vectorized extraction operator: one Arrow-batched ``mapInArrow``.
 
 This is the Spark face of the pure kernel (SURVEY.md §2.10): the reference
 processes documents in a sequential ``foreach`` (``Worker.cs:102``); here
 each executor thread pulls Arrow batches of (url, html) rows and runs the
 kernel per document — per-document Python amortized per batch, zero
 per-row serialization (no row-at-a-time UDFs anywhere, per input_hint).
-``mapInArrow`` skips the Arrow<->pandas conversion on both edges of the
-batch (~15% end-to-end on the extraction job); the pandas twin is kept as
-the readable reference implementation and both are tested identical.
+``mapInArrow`` hands the batch over as Arrow on both edges, with no
+pandas conversion; this module does not import pandas.
 
 Scale notes (100 TB design):
-- The UDF consumes only (url, warc_ts, html): callers must ``select`` those
-  three before mapInPandas so the parquet scan prunes ``text``/``lang``
-  (mapInPandas ingests whole rows — SURVEY.md §4.2).
+- The UDF consumes only (url, warc_ts, html): ``extract_pages`` selects
+  those three first so the parquet scan prunes ``text``/``lang``
+  (map-style UDFs ingest whole rows — SURVEY.md §4.2).
 - html rows can be MBs; cap Arrow batch size via
-  ``spark.sql.execution.arrow.maxRecordsPerBatch`` (set in pipeline config)
+  ``spark.sql.execution.arrow.maxBytesPerBatch`` (set by the pipeline)
   so a batch of huge pages cannot OOM an executor (SURVEY.md §7.4.4).
 - Regexes/gazetteers compile once per python worker process at module
   import — the executor-singleton pattern replacing the reference's
@@ -24,62 +22,8 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from textextraction_spark.core.extract import extract_document
 from textextraction_spark.job.schemas import EXTRACT_OUTPUT_SCHEMA
-
-
-def extract_batch(
-    batches: Iterator[pd.DataFrame], encrypt_phi: bool = False
-) -> Iterator[pd.DataFrame]:
-    """Iterator[pd.DataFrame(url, warc_ts, html[, charset])] -> extraction
-    results.  ``charset`` (optional, from transport envelopes like WARC
-    HTTP headers) rides next to the payload and reaches the kernel as the
-    transport-declared label (whatwg: BOM > transport > meta)."""
-    for pdf in batches:
-        n = len(pdf)
-        if n == 0:
-            continue
-        charsets = (
-            pdf["charset"].values if "charset" in pdf.columns else [None] * n
-        )
-        texts: list[str] = [""] * n
-        spans: list[list[dict]] = [[]] * n
-        conf = [0.0] * n
-        n_lines = [0] * n
-        n_bytes = [0] * n
-        is_pdf = [False] * n
-        errors = [""] * n
-        for i, data in enumerate(pdf["html"].values):
-            b = bytes(data) if data is not None else b""
-            r = extract_document(
-                b, encrypt_phi=encrypt_phi, declared_charset=charsets[i]
-            )
-            texts[i] = r.extracted_text
-            # vars().copy() beats dataclasses.asdict ~8x (no recursion)
-            spans[i] = [vars(s).copy() for s in r.spans]
-            conf[i] = r.confidence
-            n_lines[i] = r.n_lines
-            n_bytes[i] = len(b)
-            is_pdf[i] = r.is_pdf
-            errors[i] = r.error
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"].values,
-                "warc_ts": pdf["warc_ts"].values,
-                "extracted_text": texts,
-                "spans": spans,
-                "confidence": conf,
-                "n_lines": n_lines,
-                "n_bytes": n_bytes,
-                "is_pdf": is_pdf,
-                "error": errors,
-            }
-        )
-
 
 _SPAN_PA_FIELDS = [
     ("field", "string"),
@@ -160,12 +104,11 @@ def extract_batch_arrow(batches, encrypt_phi: bool = False):
         )
 
 
-def extract_pages(pages_df, encrypt_phi: bool = False, use_arrow: bool = True):
+def extract_pages(pages_df, encrypt_phi: bool = False):
     """pages DataFrame -> extracted DataFrame (no lineage columns yet).
 
     Projects to the minimal column set FIRST so column pruning reaches the
-    scan, then runs the Arrow-batched kernel (``mapInArrow`` by default;
-    ``use_arrow=False`` selects the mapInPandas twin).
+    scan, then runs the Arrow-batched kernel.
     """
     from functools import partial
 
@@ -175,13 +118,9 @@ def extract_pages(pages_df, encrypt_phi: bool = False, use_arrow: bool = True):
     cols = ["url", "warc_ts", "html"]
     if "charset" in pages_df.columns:
         cols.append("charset")  # transport label (WARC envelopes) -> kernel
-    projected = pages_df.select(*cols)
-    if use_arrow:
-        fn = (
-            partial(extract_batch_arrow, encrypt_phi=encrypt_phi)
-            if encrypt_phi
-            else extract_batch_arrow
-        )
-        return projected.mapInArrow(fn, schema=EXTRACT_OUTPUT_SCHEMA)
-    fn = partial(extract_batch, encrypt_phi=encrypt_phi) if encrypt_phi else extract_batch
-    return projected.mapInPandas(fn, schema=EXTRACT_OUTPUT_SCHEMA)
+    fn = (
+        partial(extract_batch_arrow, encrypt_phi=encrypt_phi)
+        if encrypt_phi
+        else extract_batch_arrow
+    )
+    return pages_df.select(*cols).mapInArrow(fn, schema=EXTRACT_OUTPUT_SCHEMA)

@@ -33,7 +33,7 @@ SPAN_TYPE = T.StructType(
     ]
 )
 
-# Columns produced by the mapInPandas kernel itself.
+# Columns produced by the mapInArrow kernel itself.
 EXTRACT_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),

@@ -47,8 +47,9 @@ from xml.etree import ElementTree as ET
 import pandas as pd
 from pyspark.sql import functions as F
 
+from textextraction_spark.core.extract import MAX_INFLATE_BYTES
+
 _ATOM = "http://www.w3.org/2005/Atom"
-_MAX_INFLATE = 64 * 1024 * 1024
 
 FAMILIES = ["html", "html_gz", "pdf", "docx", "odt", "epub", "rss", "atom"]
 
@@ -150,9 +151,9 @@ def extract_any(data: bytes) -> tuple[str, bool, str | None]:
     try:
         if gz:
             raw = gzip.GzipFile(fileobj=io.BytesIO(data)).read(
-                _MAX_INFLATE + 1
+                MAX_INFLATE_BYTES + 1
             )
-            if len(raw) > _MAX_INFLATE:
+            if len(raw) > MAX_INFLATE_BYTES:
                 return ("html", gz, None)
             data = raw
         fmt = sniff_format(data)

@@ -59,9 +59,10 @@ from xml.etree import ElementTree as ET
 import pandas as pd
 from pyspark.sql import functions as F
 
+from textextraction_spark.core.extract import MAX_INFLATE_BYTES
+
 _ATOM = "http://www.w3.org/2005/Atom"
 _EPOCH0 = 1_600_000_000  # 2020-09-13T12:26:40Z
-_MAX_INFLATE = 64 * 1024 * 1024  # gzip-bomb guard, mirrors core.extract
 
 # (offset_minutes, rfc3339 suffix) — cycled by (doc_id + item) % 4 so
 # both families and every feed hit several; the INSTANT never moves
@@ -178,8 +179,8 @@ def extract_feed_items(
     try:
         if data[:2] == b"\x1f\x8b":
             d = gzip.GzipFile(fileobj=__import__("io").BytesIO(data))
-            data = d.read(_MAX_INFLATE + 1)
-            if len(data) > _MAX_INFLATE:
+            data = d.read(MAX_INFLATE_BYTES + 1)
+            if len(data) > MAX_INFLATE_BYTES:
                 return None
         root = ET.fromstring(data)
         out: list[tuple[str, str, str, int, str]] = []

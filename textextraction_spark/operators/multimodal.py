@@ -28,7 +28,7 @@ real decode output, not a fixture echo.
 
 Scale notes: media bytes never leave the executor; the UDF emits only
 small metadata rows.  At 100 TB the same cap on Arrow batch bytes applies
-as for html (pipeline config ``arrow_max_records``).
+as for html (plans/pipeline.py ``ARROW_MAX_BYTES``).
 """
 
 from __future__ import annotations

@@ -3,17 +3,19 @@
     read pages -> project(url, warc_ts, html)        [column pruning at scan]
       -> anti-join committed urls                    [resume, K3]
       -> salted repartition                          [skew, §4.2]
-      -> mapInPandas extract                         [the kernel]
+      -> mapInArrow extract                          [the kernel]
       -> + lineage columns (part_id, batch_id)
       -> write results + commit checkpoint           [exactly-once]
       -> per-partition metrics                       [lineage, A3]
 
-Every stage is declarative except the kernel; the only shuffle in the whole
-job is the explicit repartition (verified by tests/test_plans.py reading
-the physical plan).  At 100 TB the same plan holds: the scan prunes
-columns/partitions, the anti-join broadcasts the (small) committed-url set
-or shuffles hash-to-hash, and extraction parallelism = num_partitions,
-sized ~2-4x executor cores.
+This is the only code that assembles and commits an extraction: job.py's
+batch mode and every streaming micro-batch (streaming/stream_job.py) run
+it.  Every stage is declarative except the kernel; the only shuffle in
+the whole job is the explicit repartition (verified by
+tests/test_plans.py reading the physical plan).  At 100 TB the same plan
+holds: the scan prunes columns/partitions, the anti-join broadcasts the
+(small) committed-url set or shuffles hash-to-hash, and extraction
+parallelism = num_partitions, sized ~2-4x executor cores.
 """
 
 from __future__ import annotations
@@ -26,31 +28,26 @@ from textextraction_spark.io.checkpoint import CheckpointCatalog
 from textextraction_spark.job.extract import extract_pages
 from textextraction_spark.plans.skew import salt_plan, salted_repartition
 
+# Arrow batch sizing: the BYTE cap is the real OOM guard (html rows can be
+# MBs — 32 MB bounds executor-side batch memory no matter the row mix); the
+# record cap is a secondary bound for tiny-row tables (bigger batches
+# amortize per-batch overhead, ~10% at 8k records).
+ARROW_MAX_RECORDS = 8192
+ARROW_MAX_BYTES = 32 << 20
+
 
 @dataclass
 class JobConfig:
     checkpoint_root: str
     batch_id: str
     num_partitions: int = 32
-    # Arrow batch sizing: the BYTE cap is the real OOM guard (html rows can
-    # be MBs — 32 MB bounds executor-side batch memory no matter the row
-    # mix); the record cap is a secondary bound for tiny-row tables
-    # (bigger batches amortize per-batch overhead, ~10% at 8k records).
-    arrow_max_records: int = 8192
-    arrow_max_bytes: int = 32 << 20
     diagnose_skew: bool = False  # host-freq pre-pass (off: uniform url hash)
-    rows_per_task: int = 50_000
     encrypt_phi: bool = False  # F9: deterministic AES on patient fields
-    # Extraction is per-url independent, so when the input layout is already
-    # balanced (equal-size files / splits) the fastest plan is NO shuffle at
-    # all — extract on scan partitions.  Repartition=True moves the bytes
-    # once to fix skewed layouts (tiny files, giant files, hot hosts).
-    repartition: bool = True
     # Crawl re-captures: the same url can appear with several warc_ts.
     # dedup_input=True keeps the LATEST capture per url via one max_by
     # groupBy on url — which IS a hash shuffle on url, so it REPLACES the
     # salted repartition (never pay two shuffles for the guard).  Off by
-    # default: a url-keyed Iceberg table is already unique.
+    # default: a url-keyed input table is already unique.
     dedup_input: bool = False
 
 
@@ -61,11 +58,9 @@ def run_extraction_job(spark, pages_df, cfg: JobConfig):
     re-extracts only uncommitted urls and commits atomically.
     """
     spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.arrow_max_records)
+        "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS)
     )
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxBytesPerBatch", str(cfg.arrow_max_bytes)
-    )
+    spark.conf.set("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES))
     catalog = CheckpointCatalog(cfg.checkpoint_root)
 
     # Re-running an ALREADY-COMMITTED batch id is a no-op, exactly like
@@ -73,9 +68,8 @@ def run_extraction_job(spark, pages_df, cfg: JobConfig):
     # would otherwise overwrite the batch's results with an empty set.
     # (A crashed batch has no _COMMITTED marker, so real resume still
     # re-runs its urls.)  The marker is written BEFORE the metrics, so a
-    # crash in that window (or a streaming commit, which writes no
-    # metrics) leaves a committed batch without a metrics dir —
-    # regenerate from the committed results rather than assuming
+    # crash in that window leaves a committed batch without a metrics
+    # dir — regenerate from the committed results rather than assuming
     # marker implies metrics.
     if cfg.batch_id in catalog.committed_batches():
         metrics_dir = catalog.root / "metrics" / cfg.batch_id
@@ -114,7 +108,7 @@ def run_extraction_job(spark, pages_df, cfg: JobConfig):
             latest = F.max_by(
                 F.struct("warc_ts", "html", *extra_cols), "warc_ts"
             ).alias("s")
-            pending = (
+            distributed = (  # already hash-partitioned by url
                 pending.groupBy("url")
                 .agg(latest)
                 .select(
@@ -124,14 +118,9 @@ def run_extraction_job(spark, pages_df, cfg: JobConfig):
                     *[F.col(f"s.{c}").alias(c) for c in extra_cols],
                 )
             )
-            distributed = pending  # already hash-partitioned by url
-        elif cfg.repartition:
-            plan = (
-                salt_plan(pending, cfg.rows_per_task) if cfg.diagnose_skew else None
-            )
-            distributed = salted_repartition(pending, cfg.num_partitions, plan)
         else:
-            distributed = pending
+            plan = salt_plan(pending) if cfg.diagnose_skew else None
+            distributed = salted_repartition(pending, cfg.num_partitions, plan)
 
         extracted = extract_pages(distributed, encrypt_phi=cfg.encrypt_phi).select(
             "*",

@@ -1,6 +1,6 @@
 """Extraction-pipeline queries + DuckDB oracles (the driver's gate).
 
-Each query runs the REAL engine (pages builder -> mapInPandas kernel) and
+Each query runs the REAL engine (pages builder -> mapInArrow kernel) and
 each oracle reconstructs the expected output from the ``documents`` parquet
 by pure SQL formula (sources/pages.py keeps generator and oracle from
 drifting — the html is literally built from the oracle expression).

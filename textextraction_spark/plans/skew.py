@@ -3,7 +3,7 @@
 Common-Crawl url distributions are Zipfian by host — one heavy host can
 own 30%+ of a partition range's rows (FIXTURES.md §1 bakes exactly that
 in).  AQE splits skewed *join/agg* shuffle partitions, but NOT the input
-to a black-box mapInPandas stage, so we handle it ourselves:
+to a black-box mapInArrow stage, so we handle it ourselves:
 
 1. diagnose: count rows per host (one cheap shuffle over a tiny projection);
 2. compute a salt fan-out per heavy host (ceil(count / target));
@@ -29,27 +29,30 @@ def host_expr(url_col: str = "url"):
     return F.parse_url(F.col(url_col), F.lit("HOST"))
 
 
+# One extraction task's target row count: hosts above it get salted.
+ROWS_PER_TASK = 50_000
+
+
+def _host_counts(pages_df):
+    """Rows per host.  Partial (map-side) aggregation applies — the
+    shuffle carries one row per (partition, host), not per url."""
+    return pages_df.select(host_expr().alias("host")).groupBy("host").count()
+
+
 def host_frequencies(pages_df):
-    """Diagnostic aggregation: rows per host, heaviest first.  Partial
-    (map-side) aggregation applies — the shuffle carries one row per
-    (partition, host), not per url."""
-    return (
-        pages_df.select(host_expr().alias("host"))
-        .groupBy("host")
-        .count()
-        .orderBy(F.desc("count"))
-    )
+    """Diagnostic aggregation: rows per host, heaviest first."""
+    return _host_counts(pages_df).orderBy(F.desc("count"))
 
 
-def salt_plan(pages_df, rows_per_task: int = 50_000) -> dict[str, int]:
+def salt_plan(pages_df, rows_per_task: int = ROWS_PER_TASK) -> dict[str, int]:
     """host -> salt fan-out for hosts whose row count exceeds one task's
-    target.  Tiny driver-side dict (heavy hosts only) — broadcast by value
-    into the salting expression."""
-    freqs = host_frequencies(pages_df).collect()
+    target.  The filter runs before the collect, so only heavy hosts
+    reach the driver — a tiny dict, broadcast by value into the salting
+    expression."""
+    heavy = _host_counts(pages_df).filter(F.col("count") > rows_per_task)
     return {
         r["host"]: -(-r["count"] // rows_per_task)  # ceil div
-        for r in freqs
-        if r["count"] > rows_per_task
+        for r in heavy.collect()
     }
 
 

@@ -1,7 +1,4 @@
-from textextraction_spark.sources.pages import build_pages  # noqa: F401
-from textextraction_spark.sources.warc import (  # noqa: F401
-    read_warc,
-    read_wet,
-    write_warc_dir,
-    write_wet_dir,
-)
+"""Page sources: ``pages`` (the deterministic pages-table builder) and
+``warc`` (WARC/WET/WAT read and write).  Import the submodule you need:
+there are no package-level re-exports, so reading WARC never imports
+``pages`` and its module-level pandas."""

@@ -5,25 +5,26 @@ with a 2-minute delay over an input folder (``Worker.cs:45-56``), file-move
 as commit (``Worker.cs:529``).  The Spark-native equivalent:
 
     readStream(file source over the pages directory)
-      -> mapInPandas extraction (same kernel, unchanged)
-      -> writeStream.foreachBatch(checkpoint-commit)
+      -> writeStream.foreachBatch(run_extraction_job as batch "epoch-N")
       -> trigger: ProcessingTime("2 minutes") in production,
                   availableNow for tests/backfill.
 
-``foreachBatch`` routes every micro-batch through the SAME exactly-once
-CheckpointCatalog as the batch job (io/checkpoint.py), so a crash between
-result write and commit re-runs the batch idempotently — the reference's
-at-least-once move-as-commit made exactly-once.  No watermarks/session
-windows are needed to match the reference (it has no event-time logic);
-Spark's own streaming checkpoint handles source offsets on top.
+Every micro-batch IS one run of the batch job (plans/pipeline.py), so it
+shares the batch job's resume anti-join, Arrow batch caps, exactly-once
+commit and ``metrics/epoch-N``.  That includes the committed-batch guard:
+Spark replays an epoch whose offsets it logged but never marked done (a
+crash after our commit marker, before Spark's own commit), and that
+replay must be a no-op, not an overwrite of the epoch's results with the
+now-empty pending set.  No watermarks/session windows are needed to match
+the reference (it has no event-time logic); Spark's own streaming
+checkpoint handles source offsets on top.
 """
 
 from __future__ import annotations
 
 from textextraction_spark.io.checkpoint import CheckpointCatalog
-from textextraction_spark.job.extract import extract_pages
 from textextraction_spark.job.schemas import PAGES_SCHEMA
-from textextraction_spark.plans.skew import salted_repartition
+from textextraction_spark.plans.pipeline import JobConfig, run_extraction_job
 
 
 def run_streaming_extraction(
@@ -46,12 +47,17 @@ def run_streaming_extraction(
     micro-batch through the same ``mapInArrow`` parser as the batch path.
     trigger: e.g. {"processingTime": "2 minutes"} (the reference's poll
     cadence) or {"availableNow": True} (drain-and-stop, used by tests).
-    wet_dir: when set, each micro-batch also PUBLISHES its extraction
-    results as WET segments there — epoch-prefixed file names so epochs
-    never clobber each other, cdx-wet rows appended, no per-epoch
-    manifest collect (continuous crawl-in -> published-text-out).
-    wat_dir: same contract for the metadata side — each micro-batch's
-    PAGES publish as WAT segments (title + links envelope, cdx-wat).
+    wet_dir: when set, each epoch that commits also PUBLISHES its results
+    (read back from ``results/epoch-N``, so the kernel runs once) as WET
+    segments there — epoch-prefixed file names so epochs never clobber
+    each other, cdx-wet rows appended, no per-epoch manifest collect
+    (continuous crawl-in -> published-text-out).
+    wat_dir: same contract for the metadata side — the micro-batch's
+    pages whose urls the epoch committed publish as WAT segments (title +
+    links envelope, cdx-wat).
+    Publishing happens only when the epoch was not already committed on
+    entry, so a replayed epoch appends no duplicate cdx rows; an epoch
+    that crashes between its commit and its publish is not re-published.
     Returns the StreamingQuery; caller awaits/stops it.
     """
     catalog = CheckpointCatalog(checkpoint_root)
@@ -68,27 +74,27 @@ def run_streaming_extraction(
         )
 
     def commit_batch(batch_df, epoch_id: int) -> None:
+        spark = batch_df.sparkSession
         if input_format == "warc":
             from textextraction_spark.sources.warc import parse_warc_files
 
             batch_df = parse_warc_files(batch_df)
-        pending = catalog.pending(batch_df, batch_df.sparkSession)
-        extracted = extract_pages(salted_repartition(pending, num_partitions))
-        from pyspark.sql import functions as F
-
-        extracted = extracted.select(
-            "*",
-            F.spark_partition_id().alias("part_id"),
-            F.lit(f"epoch-{epoch_id}").alias("batch_id"),
+        batch_id = f"epoch-{epoch_id}"
+        # a replayed epoch published its segments when it first committed
+        publish = batch_id not in catalog.committed_batches()
+        run_extraction_job(
+            spark, batch_df, JobConfig(checkpoint_root, batch_id, num_partitions)
         )
-        catalog.write_batch(extracted, f"epoch-{epoch_id}")
+        if not publish:
+            return
+        results = spark.read.parquet(str(catalog.results_dir / batch_id))
         if wet_dir:
             from textextraction_spark.sources.warc import write_wet_dir
 
             write_wet_dir(
-                extracted.select("url", "warc_ts", "extracted_text"),
+                results.select("url", "warc_ts", "extracted_text"),
                 wet_dir,
-                prefix=f"epoch-{epoch_id}",
+                prefix=batch_id,
                 cdx_mode="append",
                 collect_manifest=False,
             )
@@ -98,10 +104,11 @@ def run_streaming_extraction(
                 write_wat_dir,
             )
 
+            pages = batch_df.join(results.select("url"), "url", "left_semi")
             write_wat_dir(
-                build_wat(pending.select("url", "warc_ts", "html")),
+                build_wat(pages.select("url", "warc_ts", "html")),
                 wat_dir,
-                prefix=f"epoch-{epoch_id}",
+                prefix=batch_id,
                 cdx_mode="append",
                 collect_manifest=False,
             )
