@@ -1,993 +1,157 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract + BASELINE.json north_rule evidence).
+"""The repo's one-line benchmark: times the committed extraction job and
+the headline queries, and prints one JSON line.
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
-line::
+    SPARK_GRAFT_SF_DIR=<sf dir> SPARK_GRAFT_CPUS=4 python bench.py
 
-    {"metric": ..., "value": <extract e2e sec>, "unit": "sec",
-     "queries": {...per-query sec...}, "sf": ...,
-     "throughput": {docs_per_sec, mb_per_sec, n_docs},
-     "scaling": {local4, local16, efficiency_4_to_16, ...}}
+``SPARK_GRAFT_SF_DIR`` defaults to sf0.1 of the test data, and
+``SPARK_GRAFT_CPUS`` to the number of CPUs this process may run on.  The
+session is perfbench's (``perfbench.run.start_spark``) at
+``local[<cpus>]``.  Steps, in order:
 
-STDOUT SIZE CONTRACT (round-5 hardening): the driver parses the JSON
-line out of a bounded (~2000-char) stdout tail — round 4's line grew to
-2.2k chars of receipts and the round's BENCH row recorded
-``parsed: null`` even though the run itself met the north-rule bar.
-The stdout line is therefore a COMPACT summary hard-capped well under
-the tail window (enforced by a drop-list loop + a minimal fallback),
-and the full receipt payload (pair rows, per-run receipts, pinned
-sensitivity bounds, protocol text) is written to ``BENCH/LAST_RUN.json``
-and echoed to stderr.
+1. The sf's pages table (``sources.pages.build_pages``) is written to
+   parquet once, outside the timing.
+2. One untimed warm-up job, then three timed ones.  A job is
+   ``plans.pipeline.run_extraction_job`` over that parquet into a fresh
+   checkpoint root with ``num_partitions = 2 x cpus``: anti-join,
+   extraction, results write, commit and metrics.  ``extract_e2e`` and
+   ``value`` are the median wall time of the timed jobs, and
+   ``throughput`` comes from their metrics rows.  bench.py exits
+   non-zero when a job commits another number of docs than the table
+   holds, or reports ``n_err`` > 0.
+3. The eight headline ``__spark_entry__.queries()``: one untimed warm-up
+   query, then the faster of two ``.count()`` runs each.
 
-The scaling section is the sandbox protocol for the north_rule's N->4N
-executor criterion.  CANONICAL pairing (settled in round 2 after
-measuring every variant with affinity receipts — full analysis in
-BENCH/BASELINE.md): **unpinned local[4] -> local[16]**, measured as
-back-to-back pairs with the MEDIAN per-pair ratio as the headline
-(round-3 hardening: five single-shot 4->16 measurements in round 2
-spanned 0.59-0.90 because multi-minute hypervisor bursts land on
-whichever row is in flight; a burst inside a back-to-back pair degrades
-both sides and cancels in the ratio, and the median discards a polluted
-pair outright).  Round-4 hardening (protocol v3): the pair sides are
-LONG — the scaling input is ~3x the round-3 replication (rep 360:
-1.8M docs) so the 4-side runs ~90 s and the 16-side is the mean of two
-~28 s runs (>=56 s measured per side) — hypervisor bursts now amortize
-INSIDE each measured side instead of being discarded or normalized
-away; two pairs are guaranteed (a third runs when budget headroom
-remains) and per-run receipts are kept in each pair row.  Validation
-in a mid-grade window (pair probe 0.83, kernel 6.7k/8.2k): raw 0.832
-with the long sides where the short-side protocol had measured
-0.66-0.77 in comparable windows.  Strict and proportional cpuset
-pinning were both
-implemented and measured (the JVM is restarted after every affinity
-change so the mask actually applies, and each row records the JVM's real
-Cpus_allowed_list); they land at 0.66-0.76 because the single shared
-local-mode JVM's shuffle/GC threads are charged against the pinned set —
-a cost 4N SEPARATE executors do not pay — so the unpinned pairing, where
-idle CPUs stand in for per-executor overhead headroom, is the faithful
-cluster analog.  The pinned pair is still measured and reported as a
-sensitivity bound, the bare-multiprocessing machine ceiling (same
-unpinned protocol) bounds what the box itself can do, and the scaling
-phase is gated on a clean-window ceiling.  Raw unpinned local[8] ->
-local[32] is reported alongside (SMT/bandwidth-bound on this VM).
-Efficiency = (T_N / T_4N) / 4.  Disable with SPARK_GRAFT_BENCH_SCALING=0;
-replication factor via SPARK_GRAFT_BENCH_REP.
+The stdout line carries ``metric``, ``value``, ``unit``, ``queries``,
+``sf`` and ``throughput``.  Its reader parses it out of a bounded stdout
+tail, so it must stay under 1,900 chars; it holds fixed keys and numbers
+only (tests/test_bench_line.py pins the worst case).  Progress goes to
+stderr.  Per-core and per-layer numbers come from ``perfbench/run.py``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import statistics
 import sys
+import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-def _read_cpu() -> tuple[int, int]:
-    """(steal_jiffies, total_jiffies) from /proc/stat — measurement-quality
-    signal on shared hypervisors."""
-    try:
-        v = [int(x) for x in open("/proc/stat").readline().split()[1:9]]
-        return v[7], sum(v)
-    except Exception:
-        return 0, 1
-
-
-def _steal_pct(before: tuple[int, int], after: tuple[int, int]) -> float:
-    dt = after[1] - before[1]
-    return round(100.0 * (after[0] - before[0]) / dt, 2) if dt > 0 else 0.0
-
-
-def _mp_work(args):
-    n_iter, texts = args
-    from textextraction_spark.core.extract import extract_document
-    from textextraction_spark.sources.pages import SHELL_A_POST, SHELL_A_PRE
-
-    docs = [(SHELL_A_PRE + "<p>" + t + "</p>" + SHELL_A_POST).encode() for t in texts]
-    c = 0
-    for _ in range(n_iter):
-        for d in docs:
-            extract_document(d)
-            c += 1
-    return c
+HEADLINE_QUERIES = (
+    "dedup_minhash_lsh",
+    "dedup_exact",
+    "dedup_incremental",
+    "ann_brute_force_topk",
+    "text_profile",
+    "doc_quality_signals",
+    "q1_pricing_summary",
+    "media_metadata",
+)
+TIMED_JOBS = 3
+# Replaces perfbench's JVM options: C1 only as there, but with a larger
+# code cache (C1's default 48 MB fills with the query phase's generated
+# classes, and a full code cache fails queries instead of slowing them)
+# and without the pre-touched heap, which only steadies perfbench's RSS.
+JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=256m"
 
 
-PIN16 = frozenset(range(16))  # the fixed cpuset of the canonical pairing
-
-# Per-query baselines (local[32], warm, sf0.1, best-of-2): the round-2
-# DRIVER-measured values where the operator is unchanged, plus measured
-# round-3 values for the new composites and the honest-codec
-# media_metadata (which now synthesizes + really decodes WAV/GIF files
-# per doc instead of md5-hashing text bytes — genuine work, slower on
-# purpose).  The soft regression gate warns at >1.5x these; window
-# variance on this VM is ±2x across hypervisor bursts, so warnings are
-# a signal to re-measure, not a hard fail.
-QUERY_BASELINES = {
-    # 1.9 = round-2's clean-window 2.1 scaled by the round-3 scanner's
-    # +10% interleaved A/B (the only clean-window-comparable evidence);
-    # the 1.38-1.6 s rows in the ledger were all measured in
-    # self-described degraded windows, so they are NOT baselines.  A
-    # clean-window re-baseline is pending (BENCH/BASELINE.md).
-    "extract_e2e": 1.9,
-    "dedup_minhash_lsh": 2.2,
-    "dedup_exact": 0.5,
-    "dedup_incremental": 0.85,
-    "ann_brute_force_topk": 0.5,
-    "text_profile": 0.55,
-    # re-recorded round 4 at the full branch set (clf+c4+gq+decon joined
-    # the composite AFTER the old 2.1 baseline): warm runs 2.7-3.0 s in a
-    # 7.2k-kernel window (VERDICT r03 "what's wrong" #2)
-    "doc_quality_signals": 2.7,
-    "q1_pricing_summary": 0.5,
-    # re-recorded round 4: warm runs 1.07-1.08 s in a 7.2k-kernel window
-    # and 1.41-1.46 s in a 5.4k-kernel window at the current branch (the
-    # old 1.9 was itself set in a degraded window).  1.4 = mid-window
-    # warm cost; the python-synth path (make_wav/make_gif per doc) is
-    # the most window-sensitive query in the suite, and its COLD first
-    # run in a session pays the UDF ship + worker spin (3-8 s) — which
-    # is why the query-phase early-exit now ignores run 1.
-    "media_metadata": 1.4,
-}
+def log(t_start: float, msg: str) -> None:
+    print(f"[bench t+{time.perf_counter() - t_start:6.1f}s] {msg}", file=sys.stderr)
 
 
-def _set_affinity(cpus) -> None:
-    try:
-        os.sched_setaffinity(0, cpus)
-    except OSError:
-        pass
-
-
-def _reset_jvm() -> None:
-    """spark.stop() leaves the py4j gateway JVM alive, and a process
-    keeps the CPU mask it was born with — so a JVM launched before
-    sched_setaffinity would silently ignore the pinned cpuset.  The
-    pinned protocol therefore forces a FRESH JVM (which, with its python
-    workers, inherits the current mask) after every affinity change."""
-    from pyspark import SparkContext
-
-    gw = SparkContext._gateway
-    if gw is not None:
-        proc = getattr(gw, "proc", None)
-        try:
-            gw.shutdown()
-        except Exception:
-            pass
-        # gw.shutdown() alone can leave the JVM process alive (and
-        # burning CPU on GC/daemon threads) — terminate it outright.
-        if proc is not None:
-            try:
-                proc.terminate()
-                proc.wait(timeout=10)
-            except Exception:
-                try:
-                    proc.kill()
-                except Exception:
-                    pass
-    SparkContext._gateway = None
-    SparkContext._jvm = None
-
-
-def _jvm_cpus(spark) -> str:
-    """The gateway JVM's actual Cpus_allowed_list (measurement receipt)."""
-    try:
-        pid = spark.sparkContext._gateway.proc.pid
-        for line in open(f"/proc/{pid}/status"):
-            if line.startswith("Cpus_allowed_list"):
-                return line.split()[1]
-    except Exception:
-        pass
-    return "unknown"
-
-
-_CEILING_TEXTS: list[str] | None = None
-
-
-def _ceiling_texts(sf_dir: str) -> list[str]:
-    global _CEILING_TEXTS
-    if _CEILING_TEXTS is None:
-        import duckdb
-
-        _CEILING_TEXTS = [
-            r[0]
-            for r in duckdb.connect()
-            .execute(
-                f"select text from read_parquet('{sf_dir}/documents.parquet') limit 1000"
-            )
-            .fetchall()
-        ]
-    return _CEILING_TEXTS
-
-
-def _machine_ceiling(
-    sf_dir: str, sizes: tuple[int, ...] = (4, 8, 16, 32), iters: int = 25
-) -> dict[str, float]:
-    """Bare-multiprocessing scaling of the same kernel: the box's ceiling,
-    measured UNPINNED like the canonical pipeline rows (same protocol on
-    both sides of the normalization).  ``sizes=(4, 16), iters=12`` is the
-    fast per-pair window probe (~6 s)."""
-    import multiprocessing as mp
-
-    texts = _ceiling_texts(sf_dir)
-    rates: dict[int, float] = {}
-    for procs in sizes:
-        with mp.Pool(procs) as pool:
-            pool.map(_mp_work, [(1, texts)] * procs)  # warm imports
-            t0 = time.time()
-            total = sum(pool.map(_mp_work, [(iters, texts)] * procs))
-            rates[procs] = total / (time.time() - t0)
-    out = {}
-    if 4 in rates and 16 in rates:
-        out["4_to_16"] = round(rates[16] / rates[4] / 4.0, 3)
-    if 8 in rates and 32 in rates:
-        out["8_to_32"] = round(rates[32] / rates[8] / 4.0, 3)
-    return out
-
-
-def _kernel_1core(sf_dir: str, iters: int = 10) -> float:
-    """Single-core kernel speed (docs/s) — the crispest window-quality
-    receipt.  The hypervisor's burst mode often hides in USER time
-    (ledger run 14: rep120 62.7 s at 0.34% steal), where steal% reads
-    clean but this number halves; the recorded clean-window reference is
-    ~8.2k docs/s for the pre-run-20 kernel, ~9k expected for the current
-    one (two scanner passes measured +10% A/B on the same input; no clean
-    window has been available to re-baseline — BENCH/BASELINE.md)."""
-    texts = _ceiling_texts(sf_dir)
-    _mp_work((1, texts))  # warm
-    t0 = time.time()
-    n = _mp_work((iters, texts))
-    return round(n / (time.time() - t0), 1)
-
-
-def make_session(cores: int):
-    from pyspark.sql import SparkSession
-
-    os.makedirs("/dev/shm/spark_local", exist_ok=True)
-    return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(f"textextraction-bench-{cores}")
-        .config("spark.sql.shuffle.partitions", str(max(cores * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(32 << 20))
-        # The bench input is 64 smallish files; the default 128 MB split
-        # coalesces them into ~6 scan partitions, capping the scan (and
-        # the shuffle MAP stage) at 6 tasks — invisible at 8 cores, a
-        # hard ceiling at 32.  8 MB splits keep all 64 files separate.
-        .config("spark.sql.files.maxPartitionBytes", str(8 << 20))
-        .config("spark.driver.memory", "48g")
-        # shuffle spill to RAM-backed tmpfs: the extraction shuffle moves
-        # the html bytes once; on shared disks its IO otherwise caps the
-        # 32-core run while hiding behind slower python at 8 cores
-        .config("spark.local.dir", "/dev/shm/spark_local")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
-
-def replicated_pages(spark, sf_dir: str, rep: int):
-    """pages x rep with unique urls — same bytes, rep-scaled volume."""
-    from pyspark.sql import functions as F
-
-    from textextraction_spark.sources.pages import build_pages
-
-    pages = build_pages(spark, sf_dir)
-    if rep <= 1:
-        return pages
-    return pages.withColumn(
-        "r", F.explode(F.sequence(F.lit(1), F.lit(rep)))
-    ).withColumn("url", F.concat("url", F.lit("?r="), F.col("r"))).drop("r")
-
-
-def materialize_pages(spark, sf_dir: str, rep: int, out_dir: str) -> None:
-    """Write the (replicated) pages table to parquet — the bench input.
-    The north_rule job READS a pages table; generation is not part of the
-    measured pipeline."""
-    if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
-        # 64 output files so the bench scan parallelizes on any core count
-        # (a single fat file caps scan parallelism at its row groups).
-        replicated_pages(spark, sf_dir, rep).repartition(64).write.mode(
-            "overwrite"
-        ).parquet(out_dir)
-
-
-def run_extract(spark, pages_dir: str, partitions: int):
-    """One full extraction pass over a stored pages table; returns
-    (seconds, n_docs, n_bytes)."""
-    from pyspark.sql import functions as F
-
-    from textextraction_spark.job.extract import extract_pages
-    from textextraction_spark.job.schemas import PAGES_SCHEMA
-    from textextraction_spark.plans.skew import salted_repartition
-
-    pages = spark.read.schema(PAGES_SCHEMA).parquet(pages_dir)
-    t0 = time.time()
-    out = extract_pages(salted_repartition(pages, partitions))
-    row = out.agg(
-        F.count("*").alias("n"),
-        F.sum("n_bytes").alias("b"),
-        # no_text_layer is a legitimate per-row outcome (the image-only
-        # scanned-PDF family), not a pipeline failure
-        F.sum(
-            F.when(
-                (F.col("error") != "") & (F.col("error") != "no_text_layer"), 1
-            ).otherwise(0)
-        ).alias("err"),
-    ).first()
-    dt = time.time() - t0
-    assert row["err"] == 0, f"extraction errors: {row['err']}"
-    return dt, row["n"], row["b"]
-
-
-def _mark(t_start: float, label: str) -> None:
-    """Phase timestamps on stderr — wall-time receipts for reading a
-    bench emission (and for keeping the harness under external caps)."""
-    print(f"[bench t+{time.time() - t_start:6.1f}s] {label}", file=sys.stderr)
-
-
-def _pair_median(pair_rows: list) -> tuple:
-    """North-rule headline: median per-pair ratio, steal-gated.
-
-    Steal% is an EXTERNAL receipt (/proc/stat delta across the measured
-    side), not a number derived from our own timings — a pair whose side
-    measured >=5% steal was provably sharing its CPUs with another
-    tenant DURING the measurement (ledger run 34: 17.71% on pair 2's
-    16-side while pair 1 ran at <=0.08%), and with two pairs the median
-    has no outlier protection (it degenerates to the mean, so one stolen
-    pair halves the headline).  Standard contaminated-measurement
-    rejection: median over the steal-clean pairs when any exist; over
-    ALL pairs when none do (a fully stolen window — run 29 — has no
-    clean evidence to prefer).  Every pair row stays in the receipts
-    either way.  Returns (median, n_excluded)."""
-    clean_effs = sorted(
-        p["efficiency"]
-        for p in pair_rows
-        if max(p["steal4"], p["steal16"]) < 5.0
-    )
-    pair_effs = clean_effs or sorted(p["efficiency"] for p in pair_rows)
-    n_excluded = len(pair_rows) - len(pair_effs) if clean_effs else 0
-    n_p = len(pair_effs)
-    # true median: average the middle two on an even pair count (picking
-    # the upper element would bias the headline high in exactly the
-    # degraded windows that truncate the loop to two pairs)
-    eff_median = round(
-        pair_effs[n_p // 2]
-        if n_p % 2
-        else (pair_effs[n_p // 2 - 1] + pair_effs[n_p // 2]) / 2,
-        3,
-    )
-    return eff_median, n_excluded
-
-
-def compact_line(full: dict) -> str:
-    """The stdout JSON line: a compact summary of ``full`` hard-capped
-    under the driver's ~2000-char stdout-tail parse window (module
-    docstring).  Receipts live in BENCH/LAST_RUN.json, never here."""
-    scaling = full.get("scaling") or {}
-    compact_scaling: dict = {}
-    if scaling:
-        for c in (4, 8, 16, 32):
-            k = f"local{c}"
-            if k in scaling:
-                compact_scaling[k] = {
-                    "sec": scaling[k]["sec"],
-                    "docs_per_sec": scaling[k]["docs_per_sec"],
-                }
-        compact_scaling["pair_efficiencies"] = [
-            p["efficiency"] for p in scaling.get("pairs_4_to_16", [])
-        ]
-        for k in (
-            "efficiency_4_to_16",
-            "normalized_4_to_16",
-            "machine_ceiling_4_to_16",
-            "kernel_1core_docs_per_sec",
-            "efficiency_8_to_32",
-            "north_rule_efficiency",
-            "steal_excluded_pairs",
-        ):
-            if k in scaling:
-                compact_scaling[k] = scaling[k]
-        compact_scaling["north_rule_protocol"] = (
-            "unpinned local[4]->local[16], long back-to-back pair sides, "
-            "median per-pair ratio over steal-clean (<5%) pairs; full "
-            "receipts in BENCH/LAST_RUN.json"
-        )
-    compact = dict(full, scaling=compact_scaling)
-    line = json.dumps(compact)
-    # Size guard, least-essential keys dropped first.  1600 leaves slack
-    # for any stderr/stdout interleaving the driver's tail might capture.
-    for drop in ("north_rule_protocol", "local8", "local32",
-                 "pair_efficiencies", "machine_ceiling_4_to_16"):
-        if len(line) <= 1600:
-            break
-        compact_scaling.pop(drop, None)
-        line = json.dumps(compact)
-    if len(line) > 1900:  # minimal fallback — must never trigger
-        compact = {
-            "metric": full["metric"],
-            "value": full["value"],
+def compact_line(queries: dict, sf: str, throughput: dict) -> str:
+    """The one stdout line; ``value`` is the extraction job's time."""
+    return json.dumps(
+        {
+            "metric": "extract_e2e_sec",
+            "value": queries["extract_e2e"],
             "unit": "sec",
-            "queries": full["queries"],
-            "sf": full["sf"],
-            "throughput": full["throughput"],
-            "scaling": {
-                "efficiency_4_to_16": compact_scaling.get("efficiency_4_to_16"),
-                "north_rule_efficiency": compact_scaling.get(
-                    "north_rule_efficiency"
-                ),
-            },
+            "queries": queries,
+            "sf": sf,
+            "throughput": throughput,
         }
-        line = json.dumps(compact)
-    return line
+    )
+
+
+def check_counts(metrics_rows, n_pages: int) -> tuple[int, int]:
+    """(n_docs, bytes_in) of a committed job; exits non-zero when the job
+    committed another number of docs than the input holds or failed on
+    any (``no_text_layer`` is an outcome, not a failure: see
+    ``plans.pipeline._write_metrics``)."""
+    n_docs = sum(r["n_docs"] for r in metrics_rows)
+    n_err = sum(r["n_err"] for r in metrics_rows)
+    if n_docs != n_pages or n_err:
+        sys.exit(f"bench: job committed {n_docs} of {n_pages} docs, n_err {n_err}")
+    return n_docs, sum(r["bytes_in"] for r in metrics_rows)
+
+
+def run_job(spark, pages_dir: str, root: str, cores: int, n_pages: int):
+    """One committed extraction batch into ``root``; returns
+    (wall seconds, n_docs, bytes_in)."""
+    from textextraction_spark.plans.pipeline import JobConfig, run_extraction_job
+
+    t0 = time.perf_counter()
+    metrics = run_extraction_job(
+        spark,
+        spark.read.parquet(pages_dir),
+        JobConfig(checkpoint_root=root, batch_id="bench", num_partitions=2 * cores),
+    )
+    wall = time.perf_counter() - t0
+    return (wall, *check_counts(metrics.collect(), n_pages))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # 360 (1.8M docs, ~1.3 GB html) since protocol v3: the SAME table
-    # feeds the local[32] throughput row and the scaling pairs, and it
-    # is sized so each pair side measures >=56 s (bursts amortize
-    # inside the side).  Materialization cost is ~17 s.
-    rep = int(os.environ.get("SPARK_GRAFT_BENCH_REP", "360"))
-    do_scaling = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0"
-    # Soft deadline: once elapsed time passes the budget, remaining
-    # measurements drop to single attempts and repair rounds are skipped,
-    # so retries during hypervisor bursts cannot run the harness long.
-    # 540 s under protocol v3: the two guaranteed long pairs + e2e +
-    # throughput land near 520 s, and the budget gates ATTEMPTS, not
-    # phases — the 8/32 sensitivity rows, the pinned pair, and the
-    # repair round are the first to drop (all have recorded ledger
-    # entries), keeping worst-case wall clear of external ~12-min caps.
-    budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "540"))
-    t_start = time.time()
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    t_start = time.perf_counter()
 
     import __spark_entry__ as E
+    from perfbench.run import start_spark, stop_spark
+    from textextraction_spark.sources.pages import build_pages
 
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bench_pages_")
-    pages_sf = os.path.join(work, "pages_sf")
-    pages_rep = os.path.join(work, "pages_rep")
-
-    spark = make_session(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    _mark(t_start, "session up")
-    materialize_pages(spark, sf_dir, 1, pages_sf)
-    materialize_pages(spark, sf_dir, rep, pages_rep)
-    _mark(t_start, "pages materialized")
-
-    queries: dict[str, float] = {}
-
-    # Warm python workers + codegen before any timing (zip ship, imports,
-    # regex compile happen once per worker process).
-    run_extract(spark, pages_sf, cpus * 3)
-
-    _mark(t_start, "workers warm")
-    # The hypervisor's interference comes in multi-minute bursts that the
-    # steal counter underreports (memory-bandwidth contention shows as
-    # user time) — every measurement below is best-of-2 so a burst cannot
-    # scramble a single number.
-    # Headline: the extraction pipeline end-to-end (unreplicated sf).
-    t = run_extract(spark, pages_sf, cpus * 3)[0]
-    if (time.time() - t_start) < budget_s * 0.3:
-        t = min(t, run_extract(spark, pages_sf, cpus * 3)[0])
-    queries["extract_e2e"] = round(t, 3)
-
-    # (The operator query phase runs LAST — see below.  Ledger runs 11,
-    # 13-15: in degraded windows the query phase's retries ate the whole
-    # soft budget BEFORE the scaling pairs ran, collapsing the median
-    # protocol to a single polluted pair.  The scaling phase is the
-    # north-rule headline; budget exhaustion must truncate query retries,
-    # never the pairs.)
-
-    # Replicated throughput at full cores (the 100TB-shaped measurement).
-    # FRESH JVM first: in round 2 this same job measured 18.1 s here vs
-    # 7.7 s in the scaling phase — a session that has already run ~25
-    # queries carries heap/broadcast/codegen-cache baggage that a
-    # production spark-submit job never starts with.  The measurement is
-    # of the JOB, not of the harness's session history.
-    spark.stop()
-    _reset_jvm()
-    spark = make_session(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    run_extract(spark, pages_sf, cpus * 3)  # re-warm python workers
-    t_full, n_docs, n_bytes = run_extract(spark, pages_rep, cpus * 3)
-    # best-of-2 only while the budget is healthy: in burst windows a
-    # second ~60 s rep run starves the scaling pairs downstream
-    if (time.time() - t_start) < budget_s * 0.5:
-        t2, _, _ = run_extract(spark, pages_rep, cpus * 3)
-        t_full = min(t_full, t2)
-    queries[f"extract_rep{rep}"] = round(t_full, 3)
-    _mark(t_start, "rep throughput done")
-    throughput = {
-        "n_docs": int(n_docs),
-        "mb": round(n_bytes / 1e6, 1),
-        "docs_per_sec": round(n_docs / t_full, 1),
-        "mb_per_sec": round(n_bytes / 1e6 / t_full, 2),
-    }
-    spark.stop()
-
-    scaling = {}
-    if do_scaling:
-
-        # Canonical rows run UNPINNED (see the protocol note in the
-        # module docstring and BENCH/BASELINE.md: every strict-cpuset
-        # variant was measured with jvm_cpus receipts and charges the
-        # shared local-mode JVM's overhead against the pinned set — a
-        # cost 4N separate executors do not pay).  A pinned sensitivity
-        # pair is measured after the main rows.
-        def measure(
-            cores: int,
-            prev_best: dict | None = None,
-            cpuset=None,
-            max_attempts: int = 4,
-            clean_target: int = 2,
-            n_runs: int | None = None,
-        ) -> dict:
-            # ALWAYS restart the JVM so it (and its python workers) is
-            # born under the requested mask (a leftover pinned JVM would
-            # otherwise taint unpinned rows and vice versa).
-            _reset_jvm()
-            _set_affinity(cpuset or range(os.cpu_count()))
-            try:
-                s = make_session(cores)
-                s.sparkContext.setLogLevel("ERROR")
-                jvm_mask = _jvm_cpus(s)
-                run_extract(s, pages_sf, cores * 3)  # spin python workers
-                if n_runs is not None:
-                    # protocol v3 pair side: MEAN of n back-to-back runs
-                    # with NO steal-gated retries — the side is sized so
-                    # bursts amortize inside the measured window instead
-                    # of being dodged (per-run receipts retained)
-                    runs = []
-                    n_c = b_c = 0
-                    for _ in range(n_runs):
-                        st0 = _read_cpu()
-                        t_c, n_c, b_c = run_extract(s, pages_rep, cores * 3)
-                        runs.append(
-                            {"sec": round(t_c, 2),
-                             "steal_pct": _steal_pct(st0, _read_cpu())}
-                        )
-                    s.stop()
-                    mean_sec = sum(r["sec"] for r in runs) / len(runs)
-                    return {
-                        "sec": round(mean_sec, 2),
-                        "docs_per_sec": round(n_c / mean_sec, 1),
-                        "mb_per_sec": round(b_c / 1e6 / mean_sec, 2),
-                        "steal_pct": max(r["steal_pct"] for r in runs),
-                        "jvm_cpus": jvm_mask,
-                        "runs": runs,
-                    }
-                best = prev_best
-                clean = 0
-                if (time.time() - t_start) > budget_s:
-                    max_attempts = 1
-                for _attempt in range(max_attempts):
-                    st0 = _read_cpu()
-                    t_c, n_c, b_c = run_extract(s, pages_rep, cores * 3)
-                    steal_pct = _steal_pct(st0, _read_cpu())
-                    cur = {
-                        "sec": round(t_c, 2),
-                        "docs_per_sec": round(n_c / t_c, 1),
-                        "mb_per_sec": round(b_c / 1e6 / t_c, 2),
-                        "steal_pct": steal_pct,
-                        "jvm_cpus": jvm_mask,  # receipt: the ACTUAL mask
-                    }
-                    if best is None or cur["sec"] < best["sec"]:
-                        best = cur
-                    # steal-gated: hypervisor bursts also hide in user
-                    # time, so one clean-looking run can still be slow —
-                    # callers choose how many sub-3%-steal runs to demand
-                    if steal_pct < 3.0:
-                        clean += 1
-                        if clean >= clean_target:
-                            break
-                    else:
-                        # 10 s, not 20: a multi-minute burst won't end
-                        # either way (the pair-repair pass owns that
-                        # case); in degraded windows the saved budget is
-                        # what lets pair 3 + the repair run at all
-                        time.sleep(10)
-                s.stop()
-                return best
-            finally:
-                _set_affinity(range(os.cpu_count()))
-
-        # Window gate first (see ceiling comment below): don't burn the
-        # expensive pipeline measurements in a degraded window.
-        ceiling = _machine_ceiling(sf_dir)
-        k1_phase = _kernel_1core(sf_dir)
-        _mark(t_start, f"phase ceiling {ceiling} kernel_1core {k1_phase}")
-        # No phase-level retry (ledger runs 11 and 16): the retry's ~55 s
-        # came straight out of the pair budget, and every pair carries
-        # its OWN ~6 s window gate with a bounded wait — the per-pair
-        # gates subsume the phase gate.  A persistent low ceiling is the
-        # normalization denominator doing its job, not a gate failure.
-
-        # ---- Canonical 4->16: INTERLEAVED pairs, median of ratios ----
-        # Round-2 lesson: five unpinned 4->16 measurements spanned
-        # 0.59-0.90 because the hypervisor's multi-minute bursts land on
-        # whichever single row is in flight.  Robust protocol: measure
-        # local[4] and local[16] BACK-TO-BACK inside one pair (a burst
-        # then degrades both sides and roughly cancels in the ratio) and
-        # take the MEDIAN of three per-pair ratios — one polluted pair
-        # cannot move the estimate.
-        results: dict[int, dict] = {}
-        pair_effs: list[float] = []
-        pair_rows = []
-        for i in range(3):
-            # A 1-pair "median" is a single exposed measurement — the
-            # protocol's whole point is lost (ledger runs 11/13/15).
-            # Guarantee TWO pairs regardless of budget; pair 3 runs only
-            # with a full pair (~175 s) of headroom left.  The downstream
-            # 8/32 + pinned sensitivity rows and the query re-check
-            # absorb the overage.
-            if i > 1 and (time.time() - t_start) > budget_s - 200:
-                break
-            # Per-PAIR window gate: the phase-level gate certifies only
-            # the moment the phase starts, and windows shift mid-phase —
-            # a quick 4/16 mp probe (~6 s) before each pair waits out a
-            # degraded window (bounded), and its value is recorded in
-            # the pair row as a receipt.
-            qc = _machine_ceiling(sf_dir, sizes=(4, 16), iters=12).get(
-                "4_to_16", 0.0
-            )
-            if qc < 0.85 and (time.time() - t_start) < budget_s:
-                time.sleep(30)  # one bounded wait; the median handles the rest
-                qc = _machine_ceiling(sf_dir, sizes=(4, 16), iters=12).get(
-                    "4_to_16", 0.0
-                )
-            k1 = _kernel_1core(sf_dir)
-            # protocol v3 sides: long runs, MEAN not best-of, zero
-            # steal-gated retries — the 4-side is one ~90 s run, the
-            # 16-side the mean of two ~28 s runs (>=56 s measured), so
-            # a burst degrades the side pro-rata instead of binomially
-            r4 = measure(4, n_runs=1)
-            r16 = measure(16, n_runs=2)
-            eff = round((r4["sec"] / r16["sec"]) / 4.0, 3)
-            pair_effs.append(eff)
-            pair_rows.append(
-                {"local4_sec": r4["sec"], "local16_sec": r16["sec"],
-                 "local16_runs": [r["sec"] for r in r16.get("runs", [])],
-                 "steal4": r4["steal_pct"], "steal16": r16["steal_pct"],
-                 "window_ceiling": qc, "kernel_1core": k1,
-                 "efficiency": eff,
-                 # pair-LOCAL normalization: this pair's ratio over the
-                 # mp ceiling probed seconds before it (run 19 lesson:
-                 # the PHASE ceiling read 0.969 while the pairs ran
-                 # under 0.78-0.86 sub-windows — normalizing a pair by
-                 # a ceiling from a different window is meaningless)
-                 "normalized": round(eff / min(qc, 1.0), 3) if qc else None}
-            )
-            for c, r in ((4, r4), (16, r16)):
-                if c not in results or r["sec"] < results[c]["sec"]:
-                    results[c] = r
-            _mark(t_start, f"pair {i + 1}: {pair_rows[-1]}")
-        # ---- Pair repair (bounded): a pair whose BEST runs never went
-        # steal-clean sat entirely inside one hypervisor burst (the
-        # in-pair retries are seconds apart, bursts last minutes) — with
-        # two such pairs the median itself is polluted.  Re-measure the
-        # dirtiest pair after a wait, replace only if the re-run is
-        # cleaner, and mark the row as repaired (receipt honesty).
-        for _repair in range(1):
-            # ONE repair round under protocol v3 (a pair costs ~175 s
-            # now), allowed to overrun the soft budget by a bounded
-            # window (ledger run 17: a steal-dirty pair survived to the
-            # median because the repair was budget-skipped).  The +120 s
-            # overage keeps the worst case clear of the external wall.
-            over = (time.time() - t_start) - budget_s
-            if over > 120:
-                break
-            dirty = [
-                (max(p["steal4"], p["steal16"]), idx)
-                for idx, p in enumerate(pair_rows)
-                if max(p["steal4"], p["steal16"]) >= 3.0
-            ]
-            if not dirty:
-                break
-            _, idx = max(dirty)
-            time.sleep(20)
-            # fresh window probe for the repair (the original pair's qc
-            # certified a window that is minutes stale by now)
-            rqc = _machine_ceiling(sf_dir, sizes=(4, 16), iters=12).get(
-                "4_to_16", 0.0
-            )
-            rk1 = _kernel_1core(sf_dir)
-            r4 = measure(4, n_runs=1)
-            r16 = measure(16, n_runs=2)
-            reff = round((r4["sec"] / r16["sec"]) / 4.0, 3)
-            new_row = {
-                "local4_sec": r4["sec"], "local16_sec": r16["sec"],
-                "local16_runs": [r["sec"] for r in r16.get("runs", [])],
-                "steal4": r4["steal_pct"], "steal16": r16["steal_pct"],
-                "window_ceiling": rqc, "kernel_1core": rk1,
-                "efficiency": reff,
-                "normalized": round(reff / min(rqc, 1.0), 3) if rqc else None,
-                "repaired": True,
-            }
-            if max(new_row["steal4"], new_row["steal16"]) < max(
-                pair_rows[idx]["steal4"], pair_rows[idx]["steal16"]
-            ):
-                pair_rows[idx] = new_row
-                for c, r in ((4, r4), (16, r16)):
-                    if c not in results or r["sec"] < results[c]["sec"]:
-                        results[c] = r
-            _mark(t_start, f"pair repair {idx}: {pair_rows[idx]}")
-        eff_median, n_excluded = _pair_median(pair_rows)
-
-        # 8 / 32 rows once each (table completeness + the SMT-bound
-        # 8->32 sensitivity pairing) — single attempts: these are
-        # sensitivity rows, and wall time must clear external ~10-min caps
-        for c in (8, 32):
-            if (time.time() - t_start) > budget_s:
-                break  # sensitivity rows — dropped first under the cap
-            results[c] = measure(c, max_attempts=1, clean_target=1)
-        _mark(t_start, "8/32 rows done")
-        # Monotonicity repair: more cores must not be slower (same job,
-        # same input).  A violation means a burst polluted one row —
-        # re-measure the suspect configs (bounded: 2 repair rounds).
-        for _round in range(2):
-            if (time.time() - t_start) > budget_s:
-                break
-            suspects = set()
-            for lo, hi in ((4, 8), (8, 16), (16, 32)):
-                if lo not in results or hi not in results:
-                    continue
-                if results[hi]["docs_per_sec"] < results[lo]["docs_per_sec"]:
-                    suspects.update((lo, hi))
-            if not suspects:
-                break
-            time.sleep(15)
-            for c in sorted(suspects):
-                results[c] = measure(c, prev_best=results[c])
-        # Machine ceiling: the same kernel under bare multiprocessing (no
-        # Spark) — how far THIS box can scale CPU-bound work at all.  On a
-        # real cluster 4N executors bring 4N memory bandwidth; one box does
-        # not, so pipeline efficiency is reported alongside its ceiling.
-        # (Measured up front as the window gate; see above.)
-        scaling = {
-            f"local{c}": results[c] for c in (4, 8, 16, 32) if c in results
-        }
-        scaling["pairs_4_to_16"] = pair_rows
-        scaling["efficiency_4_to_16"] = eff_median
-        if n_excluded:
-            scaling["steal_excluded_pairs"] = n_excluded
-        scaling["machine_ceiling_4_to_16"] = ceiling.get("4_to_16")
-        # window-speed receipt: single-core kernel docs/s at phase start
-        # (clean-window reference ~8.2k — at half that, the box is in
-        # its user-time burst mode and EVERY absolute number below is
-        # machine-degraded, whatever steal% says)
-        scaling["kernel_1core_docs_per_sec"] = k1_phase
-        # Normalized headline = MEDIAN of the per-pair normalized scores
-        # (each pair's ratio over the ceiling probed seconds before it,
-        # capped at 1 — a probe ceiling above 1 is the probe's own noise
-        # and must not deflate the pipeline).  Run 19 showed why the old
-        # phase-level normalization misleads: phase ceiling 0.969, but
-        # both pairs ran in 0.78-0.86 sub-windows, so the pipeline was
-        # debited for machine degradation its own receipts had measured.
-        pair_norms = sorted(
-            p["normalized"] for p in pair_rows if p.get("normalized")
-        )
-        if pair_norms:
-            n_n = len(pair_norms)
-            scaling["normalized_4_to_16"] = round(
-                min(
-                    pair_norms[n_n // 2]
-                    if n_n % 2
-                    else (pair_norms[n_n // 2 - 1] + pair_norms[n_n // 2]) / 2,
-                    1.0,
-                ),
-                3,
-            )
-        elif ceiling.get("4_to_16"):
-            scaling["normalized_4_to_16"] = round(
-                eff_median / min(ceiling["4_to_16"], 1.0), 3
-            )
-        if 8 in results and 32 in results:
-            eff_832 = round((results[8]["sec"] / results[32]["sec"]) / 4.0, 3)
-            scaling["efficiency_8_to_32"] = eff_832
-            scaling["machine_ceiling_8_to_32"] = ceiling.get("8_to_32")
-            if ceiling.get("8_to_32"):
-                scaling["normalized_8_to_32"] = round(
-                    eff_832 / min(ceiling["8_to_32"], 1.0), 3
-                )
-        # Pinned sensitivity pair (budget-permitting): the strict-cpuset
-        # variant the round-1 verdict asked to evaluate, with jvm_cpus
-        # receipts.  It understates cluster scaling by construction
-        # (shared-JVM overhead lands inside the pinned set), which is
-        # why it is reported as a bound rather than the canonical row.
-        if (time.time() - t_start) < budget_s:
-            p16 = measure(16, cpuset=PIN16, max_attempts=2, clean_target=1)
-            p4 = measure(4, cpuset=PIN16, max_attempts=2, clean_target=1)
-            scaling["pinned_4_to_16"] = {
-                "local4": p4,
-                "local16": p16,
-                "efficiency": round((p4["sec"] / p16["sec"]) / 4.0, 3),
-            }
-
-        # The protocol's headline number: unpinned N -> 4N on this box.
-        scaling["north_rule_protocol"] = (
-            "local[4] -> local[16], unpinned, back-to-back pairs with "
-            "LONG sides (v3: 1.8M-doc input, 4-side ~90 s single run, "
-            "16-side mean of two ~28 s runs) so hypervisor bursts "
-            "amortize inside each side; median of per-pair ratios over "
-            "steal-clean (<5%) pairs, all pairs when none are clean "
-            "(canonical; idle CPUs stand in for the per-executor "
-            "overhead headroom a 4N-executor cluster provides — see "
-            "BENCH/BASELINE.md for the strict-cpuset sensitivity bounds "
-            "and the variance analysis behind the pairing protocol)"
-        )
-        scaling["north_rule_efficiency"] = eff_median
-
-    # ---- Operator query phase (LAST on purpose — see note above) ----
-    # Headliners: text_profile / doc_quality_signals are the round-3
-    # gated composites covering the former token_stats/fingerprint and
-    # gopher_repetition entries.
-    _reset_jvm()
-    spark = make_session(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    qmap = E.queries()
-    # Session warmup BEFORE any timing: the first query in a fresh
-    # session pays the python-worker spin + UDF archive ship + Arrow
-    # init for the whole phase (measured: dedup_minhash_lsh 9.9 s cold
-    # vs 2.0 s warm).  Round 4 recorded exactly that cold run because
-    # the phase had gone past the soft budget and dropped to single
-    # attempts — the warmup makes even single-attempt numbers warm.
-    qmap["dedup_exact"](spark, sf_dir).count()
-    for name in (
-        "dedup_minhash_lsh",
-        "dedup_exact",
-        "dedup_incremental",
-        "ann_brute_force_topk",
-        "text_profile",
-        "doc_quality_signals",
-        "q1_pricing_summary",
-        "media_metadata",
-    ):
-        # up to 4 runs, early-exit once two consecutive WARM runs agree
-        # within 15% — the first run is excluded from the agreement check
-        # because it pays plan compile + codegen + (for the python-synth
-        # queries) the UDF zip/worker spin, so a cold run agreeing with a
-        # burst-slowed second run used to satisfy the old 2-run exit and
-        # record a number ~2x the warm cost (run-23 media_metadata).
-        # Past the soft budget every query drops to min-of-2 — the
-        # queries are the phase that absorbs budget exhaustion, but a
-        # single attempt records the query's OWN plan-compile cost as
-        # its runtime (the round-4 failure mode); two runs keep the
-        # worst case bounded (~8 x warm cost) while the min discards
-        # the compile run.
-        attempts = 2 if (time.time() - t_start) > budget_s else 4
-        times = []
-        for _ in range(attempts):
-            t0 = time.time()
-            n = qmap[name](spark, sf_dir).count()
-            times.append(time.time() - t0)
-            assert n >= 0
-            if len(times) >= 3 and abs(times[-1] - times[-2]) < 0.15 * min(
-                times[-2:]
-            ):
-                break
-        queries[name] = round(min(times), 3)
-    # Opportunistic e2e re-measure in this (already warm) session:
-    # extract_e2e is timed FIRST in the run, ~12 minutes before this
-    # point — when the run opens inside a hypervisor trough (ledger run
-    # 33: e2e 8.0 s at t+150 while the same input did 56k docs/s at
-    # HALF the cores at t+830), both early attempts are polluted and
-    # nothing downstream revisits them.  Two warm re-runs here cost
-    # ~2x warm e2e (bounded seconds) and min() keeps the honest best.
-    if queries["extract_e2e"] > 1.5 * QUERY_BASELINES["extract_e2e"]:
-        best = queries["extract_e2e"]
-        for _ in range(2):
-            best = min(best, run_extract(spark, pages_sf, cpus * 3)[0])
-        queries["extract_e2e"] = round(best, 3)
-        _mark(t_start, f"e2e late re-measure: {queries['extract_e2e']}")
-    spark.stop()
-    _mark(t_start, "query phase done")
-    # Soft regression gate: warn (never fail) when a headliner runs >1.5x
-    # its recorded clean-window baseline — keeps the round-2 operator-suite
-    # speedups from silently regressing (VERDICT r02 item 5).
-    regressions = {
-        name: {"sec": queries[name], "baseline_sec": base}
-        for name, base in QUERY_BASELINES.items()
-        if name in queries and queries[name] > 1.5 * base
-    }
-
-    # Regression re-check (bounded): the query phase's best-of-3 min
-    # cannot recover when the entire phase sits inside one multi-minute
-    # hypervisor burst (all three runs are slow, min included) — re-run
-    # ONLY the flagged queries in a fresh session and keep the min; a
-    # query stays flagged only if it is slow in both sessions.  Cost is
-    # bounded: one session + <=2 runs for <=3 queries.  The gate allows
-    # budget + 6 min because protocol v3's guaranteed-long scaling pairs
-    # end near t+830 s — under the old budget+60 gate the re-check could
-    # never fire in a full run (ledger run 33), exactly when it matters.
-    if regressions and (time.time() - t_start) < budget_s + 360:
-        # Defensive: a crash here must NEVER cost the run its JSON line —
-        # the re-check only ever tightens numbers already measured.
-        s = None
-        try:
-            _reset_jvm()
-            s = make_session(cpus)
-            s.sparkContext.setLogLevel("ERROR")
-            requeried = E.queries()
-            for name in list(regressions)[:3]:
-                best = queries[name]
-                for _ in range(2):
-                    if name in requeried:
-                        t0 = time.time()
-                        assert requeried[name](s, sf_dir).count() >= 0
-                        dt = time.time() - t0
-                    elif name == "extract_e2e":
-                        # bench-internal row, not a queries() entry: its
-                        # re-measure is the extraction runner itself
-                        dt = run_extract(s, pages_sf, cpus * 3)[0]
-                    else:
-                        break
-                    best = min(best, dt)
-                queries[name] = round(best, 3)
-            regressions = {
-                name: {"sec": queries[name], "baseline_sec": base}
-                for name, base in QUERY_BASELINES.items()
-                if name in queries and queries[name] > 1.5 * base
-            }
-            _mark(t_start, f"regression re-check: {regressions or 'clear'}")
-        except Exception as e:  # noqa: BLE001
-            _mark(t_start, f"regression re-check failed (kept phase-1 numbers): {e}")
-        finally:
-            if s is not None:
-                # the leak path: an exception above must not leave an
-                # orphaned JVM running next to the JSON-emit tail
-                try:
-                    s.stop()
-                except Exception:  # noqa: BLE001
-                    pass
-
-    # Window-quality annotation: when queries stay flagged, measure the
-    # single-core kernel one more time — if the BOX is running well below
-    # its clean reference, the flags are machine-degradation receipts,
-    # not code regressions (the reader sees which without a re-run).
-    if regressions:
-        regressions["_window"] = {
-            "kernel_1core_docs_per_sec": _kernel_1core(sf_dir),
-            "clean_reference": 8200,
-        }
-
-    import shutil
-
-    shutil.rmtree(work, ignore_errors=True)
-
-    full = {
-        "metric": "extract_e2e_sec",
-        "value": queries["extract_e2e"],
-        "unit": "sec",
-        "queries": queries,
-        "regressions": regressions,
-        "sf": sf,
-        "throughput": throughput,
-        "scaling": scaling,
-    }
-    # Full receipt payload → file + stderr (the driver keeps only a
-    # ~2000-char stdout tail; see the module-docstring size contract).
-    # SPARK_GRAFT_BENCH_RECEIPT redirects the receipt file so harness
-    # runs (the pytest subprocess smoke at sf0.001) never clobber the
-    # last real full-protocol receipt under BENCH/.
-    here = os.path.dirname(os.path.abspath(__file__))
-    receipt = os.environ.get("SPARK_GRAFT_BENCH_RECEIPT") or os.path.join(
-        here, "BENCH", "LAST_RUN.json"
-    )
+    work = Path(tempfile.mkdtemp(prefix="bench_"))
+    spark = None
     try:
-        os.makedirs(os.path.dirname(receipt), exist_ok=True)
-        with open(receipt, "w") as f:
-            json.dump(full, f, indent=1)
-    except OSError:
-        pass
-    print("FULL_RESULT " + json.dumps(full), file=sys.stderr)
+        spark = start_spark(work, cores, {"spark.driver.extraJavaOptions": JAVA_OPTIONS})
+        pages_dir = str(work / "pages")
+        build_pages(spark, sf_dir).write.parquet(pages_dir)
+        n_pages = spark.read.parquet(pages_dir).count()
+        log(t_start, f"local[{cores}], {n_pages} pages written")
 
-    print(compact_line(full))
+        jobs = [
+            run_job(spark, pages_dir, str(work / f"ckpt-{i}"), cores, n_pages)
+            for i in range(1 + TIMED_JOBS)
+        ][1:]  # the first is the warm-up
+        wall = statistics.median(w for w, _, _ in jobs)
+        _, n_docs, n_bytes = jobs[0]
+        queries = {"extract_e2e": round(wall, 3)}
+        throughput = {
+            "n_docs": n_docs,
+            "mb": round(n_bytes / 1e6, 1),
+            "docs_per_sec": round(n_docs / wall, 1),
+            "mb_per_sec": round(n_bytes / 1e6 / wall, 2),
+        }
+        log(t_start, f"jobs {[round(w, 2) for w, _, _ in jobs]} s")
+
+        qmap = E.queries()
+        qmap["dedup_exact"](spark, sf_dir).count()  # warm-up, untimed
+        for name in HEADLINE_QUERIES:
+            times = []
+            for _ in range(2):
+                t0 = time.perf_counter()
+                qmap[name](spark, sf_dir).count()
+                times.append(time.perf_counter() - t0)
+            queries[name] = round(min(times), 3)
+        log(t_start, "queries done")
+    finally:
+        if spark is not None:
+            stop_spark(spark)
+        shutil.rmtree(work, ignore_errors=True)
+    print(compact_line(queries, sf, throughput))
 
 
 if __name__ == "__main__":

@@ -10,6 +10,9 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def connect_duckdb(sf_dir: str):
@@ -67,7 +70,7 @@ def compare(name: str, got_df, want_df) -> list[str]:
 
 
 def run_all(names: list[str] | None = None, sf_dir: str = "/root/testdata/sf0.01"):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))  # as a script, sys.path[0] is tests/
     import __spark_entry__ as E
     from tests.conftest import make_spark
 

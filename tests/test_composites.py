@@ -9,13 +9,9 @@ each constituent operator, and a drift between the two surfaces fails CI.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as E  # noqa: E402
+import __spark_entry__ as E
 
 SF = "/root/testdata/sf0.001"
 

@@ -30,11 +30,7 @@ hardcoded vendors the same way) — not by tuning this test.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from textextraction_spark.core.gazetteer import find_org, find_person  # noqa: E402
+from textextraction_spark.core.gazetteer import find_org, find_person
 
 # (line, true person entity or None).  Truth labels are what a human (or
 # a well-trained CRF) would tag.

@@ -9,14 +9,10 @@ replicates it; CI-speed subset here at sf0.001):
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as E  # noqa: E402
-from tests.oracle_check import compare, connect_duckdb  # noqa: E402
+import __spark_entry__ as E
+from tests.oracle_check import compare, connect_duckdb
 
 SF = "/root/testdata/sf0.001"
 

@@ -200,6 +200,33 @@ class TestCheckpointResume:
         assert metrics["n_no_text_layer"].sum() == 1  # doc_id 180
         assert metrics["bytes_in"].sum() > 0
 
+    def test_job_restores_session_settings(self, spark, pages, tmp_path):
+        """The job's Arrow caps and shuffle partitions last only as long as
+        the job, also on the committed-batch early return (a replay)."""
+        keys = (
+            "spark.sql.execution.arrow.maxRecordsPerBatch",
+            "spark.sql.execution.arrow.maxBytesPerBatch",
+            "spark.sql.shuffle.partitions",
+        )
+        before = {k: spark.conf.get(k) for k in keys}
+        caller = {keys[0]: "1234", keys[1]: "5678901", keys[2]: "7"}
+        cfg = JobConfig(
+            checkpoint_root=str(tmp_path / "ckpt4"),
+            batch_id="s1",
+            num_partitions=2,
+            dedup_input=True,  # the path that also sets shuffle partitions
+        )
+        try:
+            for k, v in caller.items():
+                spark.conf.set(k, v)
+            for _ in ("batch", "replay"):
+                run_extraction_job(spark, pages.limit(20), cfg)
+                assert {k: spark.conf.get(k) for k in keys} == caller
+            assert CheckpointCatalog(cfg.checkpoint_root).committed_batches() == ["s1"]
+        finally:
+            for k, v in before.items():
+                spark.conf.set(k, v)
+
 
 class TestKernelPathParity:
     def test_arrow_kernel_matches_in_driver_kernel(self, spark, pages):

@@ -15,22 +15,18 @@ composition's correctness IS its invariants):
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from textextraction_spark.job.extract import extract_pages  # noqa: E402
-from textextraction_spark.plans.training_export import (  # noqa: E402
+from textextraction_spark.job.extract import extract_pages
+from textextraction_spark.plans.training_export import (
     SEQ_LEN,
     curate_results,
     dedup_curated,
     export_training,
     pack_training,
 )
-from textextraction_spark.sources.pages import build_pages  # noqa: E402
+from textextraction_spark.sources.pages import build_pages
 
 SF = "/root/testdata/sf0.001"
 

@@ -34,6 +34,12 @@ from textextraction_spark.plans.skew import salt_plan, salted_repartition
 # amortize per-batch overhead, ~10% at 8k records).
 ARROW_MAX_RECORDS = 8192
 ARROW_MAX_BYTES = 32 << 20
+# session settings a job changes for its own duration (restored after)
+_SESSION_KEYS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.execution.arrow.maxRecordsPerBatch",
+    "spark.sql.execution.arrow.maxBytesPerBatch",
+)
 
 
 @dataclass
@@ -57,10 +63,26 @@ def run_extraction_job(spark, pages_df, cfg: JobConfig):
     Idempotent: re-running with the same batch_id (or after a crash)
     re-extracts only uncommitted urls and commits atomically.
     """
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS)
-    )
-    spark.conf.set("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES))
+    # These settings are read at PHYSICAL-PLANNING time (i.e. when the
+    # actions below run), so the job sets them for its own duration and
+    # restores the caller's values afterwards, on every return path — a
+    # num_partitions=2 batch must not leave a shared session planning
+    # every later query with 2 partitions or with this job's Arrow caps.
+    saved = {key: spark.conf.get(key) for key in _SESSION_KEYS}
+    try:
+        spark.conf.set(
+            "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS)
+        )
+        spark.conf.set(
+            "spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES)
+        )
+        return _run_batch(spark, pages_df, cfg)
+    finally:
+        for key, value in saved.items():
+            spark.conf.set(key, value)
+
+
+def _run_batch(spark, pages_df, cfg: JobConfig):
     catalog = CheckpointCatalog(cfg.checkpoint_root)
 
     # Re-running an ALREADY-COMMITTED batch id is a no-op, exactly like
@@ -83,55 +105,44 @@ def run_extraction_job(spark, pages_df, cfg: JobConfig):
     pending = catalog.pending(
         pages_df.select("url", "warc_ts", "html", *extra_cols), spark
     )
-    # shuffle.partitions is read at PHYSICAL-PLANNING time (i.e. when the
-    # actions below run), so the dedup path sets it for the duration of
-    # this job and restores the caller's value afterwards — a
-    # num_partitions=2 batch must not leave a shared session planning
-    # every later query with 2 partitions.
-    saved_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if cfg.dedup_input:
-            # Parallelism via shuffle.partitions, NOT a pre-repartition:
-            # an explicit repartition(url) would satisfy the agg's
-            # distribution requirement, pushing BOTH partial and final
-            # HashAggregate after the exchange — every duplicate
-            # capture's full html bytes would cross the wire.  With the
-            # bare groupBy, the PARTIAL max_by runs map-side (one
-            # candidate per url per task reaches the shuffle), which on a
-            # recrawl-heavy batch shrinks the dominant shuffle by the
-            # duplication factor.  (Salting never applies here: the dedup
-            # key MUST be the raw url; a hot HOST is many distinct urls,
-            # which the url hash already spreads.)
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(cfg.num_partitions)
+    if cfg.dedup_input:
+        # Parallelism via shuffle.partitions, NOT a pre-repartition:
+        # an explicit repartition(url) would satisfy the agg's
+        # distribution requirement, pushing BOTH partial and final
+        # HashAggregate after the exchange — every duplicate
+        # capture's full html bytes would cross the wire.  With the
+        # bare groupBy, the PARTIAL max_by runs map-side (one
+        # candidate per url per task reaches the shuffle), which on a
+        # recrawl-heavy batch shrinks the dominant shuffle by the
+        # duplication factor.  (Salting never applies here: the dedup
+        # key MUST be the raw url; a hot HOST is many distinct urls,
+        # which the url hash already spreads.)
+        spark.conf.set("spark.sql.shuffle.partitions", str(cfg.num_partitions))
+        latest = F.max_by(
+            F.struct("warc_ts", "html", *extra_cols), "warc_ts"
+        ).alias("s")
+        distributed = (  # already hash-partitioned by url
+            pending.groupBy("url")
+            .agg(latest)
+            .select(
+                "url",
+                F.col("s.warc_ts").alias("warc_ts"),
+                F.col("s.html").alias("html"),
+                *[F.col(f"s.{c}").alias(c) for c in extra_cols],
             )
-            latest = F.max_by(
-                F.struct("warc_ts", "html", *extra_cols), "warc_ts"
-            ).alias("s")
-            distributed = (  # already hash-partitioned by url
-                pending.groupBy("url")
-                .agg(latest)
-                .select(
-                    "url",
-                    F.col("s.warc_ts").alias("warc_ts"),
-                    F.col("s.html").alias("html"),
-                    *[F.col(f"s.{c}").alias(c) for c in extra_cols],
-                )
-            )
-        else:
-            plan = salt_plan(pending) if cfg.diagnose_skew else None
-            distributed = salted_repartition(pending, cfg.num_partitions, plan)
-
-        extracted = extract_pages(distributed, encrypt_phi=cfg.encrypt_phi).select(
-            "*",
-            F.spark_partition_id().alias("part_id"),
-            F.lit(cfg.batch_id).alias("batch_id"),
         )
+    else:
+        plan = salt_plan(pending) if cfg.diagnose_skew else None
+        distributed = salted_repartition(pending, cfg.num_partitions, plan)
 
-        catalog.write_batch(extracted, cfg.batch_id)
-        return _write_metrics(spark, catalog, cfg.batch_id)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_shuffle)
+    extracted = extract_pages(distributed, encrypt_phi=cfg.encrypt_phi).select(
+        "*",
+        F.spark_partition_id().alias("part_id"),
+        F.lit(cfg.batch_id).alias("batch_id"),
+    )
+
+    catalog.write_batch(extracted, cfg.batch_id)
+    return _write_metrics(spark, catalog, cfg.batch_id)
 
 
 def _write_metrics(spark, catalog, batch_id: str):
@@ -149,7 +160,7 @@ def _write_metrics(spark, catalog, batch_id: str):
             # not a pipeline failure: it gets its own counter so n_err
             # keeps meaning "the pipeline broke on this row" and a
             # healthy corpus containing scanned docs reports n_err == 0
-            # (mirrors bench.py's run_extract error gate).
+            # (bench.py exits non-zero on any n_err).
             F.sum(
                 F.when(
                     (F.col("error") != "")
