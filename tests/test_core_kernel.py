@@ -790,8 +790,14 @@ class TestPdfStreamFilters:
 
     def test_filter_primitives(self):
         """Each decoder against hand-built §7.4 streams, including the
-        EOD conventions and the hex odd-digit pad."""
+        EOD conventions and the hex odd-digit pad.  The LZW cases: the
+        20k-random input walks every early-change width bump
+        (9->10->11->12) and a 4094-entry ClearCode table reset; the
+        compressible shapes exercise long matches and the KwKwK corner;
+        every truncation raises."""
         import zlib
+
+        import numpy as np
 
         from textextraction_spark.core.pdfblocks import (
             _ascii85_decode,
@@ -800,7 +806,7 @@ class TestPdfStreamFilters:
             _lzw_decode_pdf,
             _runlength_decode,
         )
-        from textextraction_spark.operators.tiff import lzw_encode
+        from textextraction_spark.sources.pages import _lzw_encode
 
         assert _ascii_hex_decode(b"48 65 6C6C 6F>") == b"Hello"
         assert _ascii_hex_decode(b"7>") == b"p"  # odd digit pads with 0
@@ -808,8 +814,22 @@ class TestPdfStreamFilters:
         assert _ascii85_decode(b"87cURD]j7B~>") == b"Hello wo"
         assert _ascii85_decode(b"87cUR~>") == b"Hell"  # partial final group
         assert _runlength_decode(b"\x02abc\xfeZ\x80") == b"abc" + b"Z" * 3
-        data = bytes(range(256)) * 5 + b"aaaaaaaa" * 40
-        assert _lzw_decode_pdf(lzw_encode(data)) == data
+        rng = np.random.RandomState(11)
+        for data in (
+            bytes(range(256)) * 5 + b"aaaaaaaa" * 40,
+            b"",
+            b"A",
+            b"A" * 500,
+            b"AB" * 4000,
+            bytes(range(256)) * 40,
+            bytes(rng.randint(0, 256, 20000, dtype=np.uint8)),
+            bytes(rng.randint(0, 4, 30000, dtype=np.uint8)),
+        ):
+            assert _lzw_decode_pdf(_lzw_encode(data)) == data
+        full = _lzw_encode(bytes(rng.randint(0, 256, 400, dtype=np.uint8)))
+        for cut in range(0, len(full) - 1, 7):
+            with pytest.raises(ValueError):
+                _lzw_decode_pdf(full[:cut])
         # chain order is left-to-right
         payload = zlib.compress(b"chained", 6)
         import base64
@@ -1028,18 +1048,6 @@ class TestReviewRegressions:
             b"endstream\n%%EOF"
         )
         assert parse_pdf(pdf).text() == "a]b c(d)e"
-
-    def test_truncated_image_headers_return_none(self):
-        from textextraction_spark.operators.multimodal import parse_image_dims
-
-        truncs = [
-            b"\x89PNG\r\n\x1a\n\x00\x00\x00\x0dIHDR\x00\x00",  # short IHDR
-            b"GIF89a\x40",  # short LSD
-            b"\xff\xd8\xff\xc0\x00\x11\x08",  # short SOF
-            b"\xff\xd8\xff\xe0\x00",  # short APP0 length
-        ]
-        for t in truncs:
-            assert parse_image_dims(t) is None, t
 
     def test_spark_email_count_matches_raw_pattern(self, spark):
         """Code-review finding: EMAIL_RE inside a plain SQL literal was

@@ -172,11 +172,9 @@ SHUFFLE_BUDGETS = {
     "doc_quality_signals": 3,
     "ann_brute_force_topk": 0,
     # round-4 rotation: the merged composites add no exchange beyond
-    # their constituents (ANN buckets broadcast; media is mapInPandas)
+    # their constituents (ANN buckets broadcast)
     "ann_bucketed": 0,
     "embedding_near_dup": 0,
-    "media_metadata": 0,
-    "media_features": 0,
     "curation_pipeline": 0,
     # round-5 rotation: PQ encode is a narrow projection; the ADC
     # branch's shortlist is a TakeOrderedAndProject (no Exchange node)

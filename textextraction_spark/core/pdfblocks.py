@@ -195,10 +195,10 @@ def _lzw_decode_pdf(data: bytes) -> bytes:
     """§7.4.4 LZWDecode with the default EarlyChange=1 — the TIFF §13
     variant: MSB-first codes, initial width 9, ClearCode 256 / EOD 257,
     width bump one code early (the decoder's table runs one entry
-    behind the writer's, so it fires at ``(1 << width) - 2``).
-    Duplicated from operators/tiff.py's strip decoder minus the
-    expected-length contract — core stays stdlib-only and must not
-    import the (pyspark-importing) operator layer."""
+    behind the writer's, so it fires at ``(1 << width) - 2``).  A
+    ClearCode resets the table; a truncated stream, a code past the
+    table or runaway expansion raises ValueError.  The fixture encoder
+    is ``sources/pages.py``'s ``_lzw_encode``."""
     out = bytearray()
     base: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
     table = list(base)

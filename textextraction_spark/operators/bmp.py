@@ -1,14 +1,12 @@
 """BMP (Windows DIB / BITMAPINFOHEADER) — a real pixel path for the
 uncompressed-bitmap tail of the crawl, in pure stdlib struct + numpy.
 
-Round 4 gave BMP an honest HEADER parse (``multimodal.parse_image_dims``
-handles BITMAPINFOHEADER and the OS/2 core header, including top-down
-negative heights); rounds 5's JPEG (``operators/jpeg.py``) and PNG
-(``operators/png.py``) codecs closed the two dominant web formats, and
-this module finishes the decodable-without-codec-libraries image tail:
-a full BI_RGB decoder for the two layouts real BMPs overwhelmingly use
-— 24-bit truecolor and 8-bit palette — in both row orders (bottom-up
-positive-height, the BMP default, and top-down negative-height).
+After the JPEG (``operators/jpeg.py``) and PNG (``operators/png.py``)
+codecs for the two dominant web formats, this module covers the
+uncompressed-bitmap tail: a full BI_RGB decoder for the two layouts
+real BMPs overwhelmingly use — 24-bit truecolor and 8-bit palette — in
+both row orders (bottom-up positive-height, the BMP default, and
+top-down negative-height).
 
 BMP is uncompressed, so like PNG the exactness standard is bit-exact
 with NO error bound: decode must reproduce the encoder's input exactly
@@ -33,7 +31,7 @@ OS/2 core headers return None rather than garbage.
 
 Reference analog: the reference rasterizes PDFs for OCR
 (/root/reference/OCR/Image.cs:20-66) but never decodes crawl images;
-this operator is part of the beyond-reference multimodal suite.
+this operator is beyond the reference and consumes no extraction output.
 
 100 TB shape: identical to the other media operators — synthesis and
 decode run executor-side inside Arrow batches via mapInPandas; no pixel
@@ -350,8 +348,8 @@ def media_bmp_decode(spark, sf_dir: str):
     top-down, plus four BI_RLE8 palette families) -> mapInPandas runs
     the full decode (row de-padding, bottom-up reversal, BGR swizzle,
     palette map, RLE8 expansion with escapes and absolute mode) on the
-    actual bytes and emits decoded pixel statistics.  Driver-gated as
-    ``media_features`` kind='bmp' (slice-pinned)."""
+    actual bytes and emits decoded pixel statistics.  Pytest-oracle-gated
+    (not a driver-gated query)."""
     from pyspark.sql import types as T
 
     from textextraction_spark.job.packaging import ensure_shipped

@@ -20,7 +20,7 @@ pure-python recompute in tests):
 - chunk_fp = md5 of the chunk text (the dedup/embedding join key).
 
 Zero exchanges (plan-pinned): one explode inside the scan projection.
-Not in the driver's 50-query gate (the cap is full) — value-compared
+Not in the driver's 50-query gate — value-compared
 against the DuckDB twin at sf0.001 in tests/test_operators.py::TestChunking,
 same compare as the gate harness.
 """

@@ -193,8 +193,8 @@ def extract_any_docs(spark, sf_dir: str):
     ONLY bytes (family provenance never reaches the executor-side
     routing), so a mis-sniff produces oracle-visibly wrong text.
     DRIVER-gated (late-round rotation: grouping_multi + set_ops
-    merged into sql_surface_suite to free the slot — the cap stays
-    pinned at exactly 50, see __spark_entry__)."""
+    merged into sql_surface_suite to free the slot; the gate holds 48
+    of its 50 slots, see __spark_entry__)."""
     from pyspark.sql import types as T
 
     from textextraction_spark.job.packaging import ensure_shipped

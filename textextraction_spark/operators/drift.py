@@ -17,7 +17,7 @@ the new snapshot's smoothed unigram distribution and the previous one's
 Snapshots here are the deterministic fixture axis ``doc_id % N_SNAPS``
 (the driver corpus carries no capture timestamp; a real deployment keys
 on the crawl id) — the aggregation/smoothing/divergence pipeline is the
-content, as with the media and graph fixtures.
+content, as with the graph fixtures.
 
 Scale shape (100 TB per snapshot):
 - per-snapshot token counts: ONE partial-aggregated shuffle of

@@ -32,7 +32,7 @@ are CAST AS DOUBLE (DuckDB parses bare decimals as DECIMAL and its
 exact arithmetic diverges from doubles).  Documents with fewer than two
 words have no bigram feature and are excluded by construction.
 
-Outside the driver's 50-query gate (the cap is full): the full value
+Outside the driver's 50-query gate: the full value
 oracle runs in tests/test_operators.py::TestDsir with the gate's own
 compare, plus a pure-python recompute pin.
 """

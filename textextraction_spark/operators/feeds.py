@@ -223,8 +223,8 @@ def feed_items(spark, sf_dir: str):
     (family by doc_id % 2, gzip transport on doc_id % 4 >= 2) →
     mapInPandas runs the full XML walk + date normalization + HTML
     summary extraction on the actual bytes and emits one row per feed
-    item.  Pytest-oracle-gated (outside the 50-query driver cap; the
-    cap is pinned exactly 50 — see __spark_entry__)."""
+    item.  Pytest-oracle-gated (not among the 48 driver-gated queries,
+    see __spark_entry__)."""
     from pyspark.sql import types as T
 
     from textextraction_spark.job.packaging import ensure_shipped

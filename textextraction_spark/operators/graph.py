@@ -27,8 +27,7 @@ Scale shape (10^12 pages → ~10^8 hosts):
 
 Out-link fixture: the synthetic pages carry only same-host relative
 links (sources/pages.py shells), so cross-host edges are synthesized by
-a deterministic shared-dialect formula from doc_id — exactly the
-fixture technique the media operators use (multimodal.py): the FIXTURE
+a deterministic shared-dialect formula from doc_id: the FIXTURE
 is synthetic, the operator pipeline (edge aggregation, degree
 normalization, rank iteration) is the real content and is recomputed
 end-to-end by the DuckDB oracle below.

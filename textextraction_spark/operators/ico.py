@@ -42,7 +42,7 @@ corrupt PNG entries return None, never raise.
 
 Reference analog: none — the reference never decodes crawl images
 (/root/reference/OCR/Image.cs:20-66 rasterizes PDFs only); this
-operator is part of the beyond-reference multimodal suite.
+operator consumes no extraction output.
 
 100 TB shape: identical to the other media operators — synthesis and
 decode run executor-side inside Arrow batches via mapInPandas; no
@@ -350,8 +350,7 @@ def media_ico_decode(spark, sf_dir: str):
     DIBs, a PNG payload, and a lying-directory multi-image icon) ->
     mapInPandas runs the full container walk + best-entry decode +
     transparency composite on the actual bytes and emits decoded pixel
-    statistics.  Driver-gated as ``media_features`` kind='ico'
-    (slice-pinned)."""
+    statistics.  Pytest-oracle-gated (not a driver-gated query)."""
     from pyspark.sql import types as T
 
     from textextraction_spark.job.packaging import ensure_shipped

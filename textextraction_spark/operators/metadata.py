@@ -281,8 +281,8 @@ def extract_page_metadata(data: bytes) -> dict:
 def page_metadata(spark, sf_dir: str):
     """Metadata extraction path: deterministic pages with decoy
     furniture → mapInPandas runs the full scan on the actual bytes.
-    Pytest-oracle-gated (outside the 50-query driver cap; the cap is
-    pinned exactly 50 — see __spark_entry__)."""
+    Pytest-oracle-gated (not among the 48 driver-gated queries, see
+    __spark_entry__)."""
     from pyspark.sql import types as T
 
     from textextraction_spark.job.packaging import ensure_shipped

@@ -4,8 +4,7 @@
 The reference extracts text from HTML and PDF documents
 (/root/reference/TextExtraction/Worker.cs:144-200); real crawls also
 carry office documents, and both modern formats are ZIP containers
-around XML — fully decodable with the standard library, so they get
-the same no-stub treatment as the media codecs:
+around XML — fully decodable with the standard library:
 
 - **DOCX**: ``word/document.xml`` — paragraphs ``w:p``, runs ``w:r``
   with text ``w:t``, explicit ``w:tab`` / ``w:br``.  Run boundaries
@@ -331,8 +330,8 @@ def office_text(spark, sf_dir: str):
     full unzip + XML/XHTML walk on the actual bytes and emits the
     extracted text plus simple stats; the EPUB family routes its
     chapters through the package's own HTML extractor.
-    Pytest-oracle-gated (outside the 50-query driver cap; the cap is
-    pinned exactly 50 — see __spark_entry__)."""
+    Pytest-oracle-gated (not among the 48 driver-gated queries, see
+    __spark_entry__)."""
     from pyspark.sql import types as T
 
     from textextraction_spark.job.packaging import ensure_shipped

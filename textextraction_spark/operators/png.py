@@ -1,13 +1,11 @@
 """PNG (ISO/IEC 15948 / RFC 2083) — a real pixel path for the web's
 second-dominant image format, in pure stdlib (zlib) + numpy.
 
-Rounds 3-4 gave PNG an honest HEADER parse (IHDR walk in
-``multimodal.parse_image_dims``); round 5 closed the JPEG pixel gap
-(``operators/jpeg.py``) and this module closes the PNG one.  Unlike
-JPEG, PNG is LOSSLESS, so the exactness standard is stronger: the full
-decode — chunk walk with CRC-32 verification, IDAT concatenation, zlib
-inflate, per-scanline unfiltering (all five filter types: None / Sub /
-Up / Average / Paeth), palette mapping — must reproduce the encoder's
+The PNG counterpart of ``operators/jpeg.py``.  Unlike JPEG, PNG is
+LOSSLESS, so the exactness standard is stronger: the full decode —
+chunk walk with CRC-32 verification, IDAT concatenation, zlib inflate,
+per-scanline unfiltering (all five filter types: None / Sub / Up /
+Average / Paeth), palette mapping — must reproduce the encoder's
 input BIT-EXACTLY on every fixture and every arbitrary image, and the
 DuckDB oracle recomputes decoded pixel statistics arithmetically from
 the fixture formulas with no error bound.
@@ -27,17 +25,16 @@ MSB-first bit-packed scanlines with zero padding bits, filtered at
 byte distance 1, unpacked per Adam7 pass so interlace composes) and
 **color type 4 (grayscale+alpha)** at depths 8/16.  Every color type x
 depth x interlace combination the spec defines now decodes except
-nothing — the PNG envelope is COMPLETE; ``multimodal.real_decode``
-is no longer needed for any PNG.
+nothing — the PNG envelope is COMPLETE.
 
 The encoder cycles the scanline filter type with the row index
 (row % 5), so every fixture stream exercises ALL FIVE unfilter paths —
 a decoder that mishandles any one of them cannot round-trip a fixture
-taller than four rows, and the driver-gated oracle would catch it.
+taller than four rows, and the DuckDB oracle would catch it.
 
 Reference analog: the reference rasterizes PDFs for OCR
 (/root/reference/OCR/Image.cs:20-66) but never decodes crawl images;
-this operator is part of the beyond-reference multimodal suite.
+this operator is beyond the reference and consumes no extraction output.
 
 100 TB shape: identical to the other media operators — synthesis and
 decode run executor-side inside Arrow batches via mapInPandas; no pixel
@@ -447,7 +444,7 @@ def media_png_decode(spark, sf_dir: str):
     cycling through all five types) -> mapInPandas runs the FULL decode
     (CRC-verified chunk walk, zlib inflate, unfilter, palette map) on
     the actual compressed bytes and emits decoded pixel statistics.
-    Driver-gated as ``media_features`` kind='png' (slice-pinned)."""
+    Pytest-oracle-gated (not a driver-gated query)."""
     from pyspark.sql import types as T
 
     from textextraction_spark.job.packaging import ensure_shipped

@@ -273,6 +273,57 @@ def _runlength_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
+def _lzw_encode(data: bytes) -> bytes:
+    """LZWDecode's inverse (PDF 32000-1 §7.4.4, default EarlyChange=1,
+    the TIFF §13 variant): codes packed MSB-first, initial width 9,
+    ClearCode 256 / EOD 257, and the width widens as soon as the next
+    code to assign reaches ``(1 << width) - 1``.  The table resets via
+    an explicit ClearCode when the next code reaches 4094."""
+    out = bytearray()
+    bitbuf = 0
+    nbits = 0
+
+    def emit(code: int, width: int) -> None:
+        nonlocal bitbuf, nbits
+        bitbuf = (bitbuf << width) | code
+        nbits += width
+        while nbits >= 8:
+            out.append((bitbuf >> (nbits - 8)) & 0xFF)
+            nbits -= 8
+        bitbuf &= (1 << nbits) - 1
+
+    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
+    next_code, width = 258, 9
+    emit(256, width)
+    w = b""
+    for b in data:
+        wc = w + bytes([b])
+        if wc in table:
+            w = wc
+            continue
+        emit(table[w], width)
+        table[wc] = next_code
+        next_code += 1
+        if next_code == (1 << width) - 1 and width < 12:
+            width += 1
+        if next_code == 4094:  # ClearCode when the table fills
+            emit(256, width)
+            table = {bytes([i]): i for i in range(256)}
+            next_code, width = 258, 9
+        w = bytes([b])
+    if w:
+        emit(table[w], width)
+        # the reader will create one more entry on seeing EOD's
+        # predecessor — mirror its width bump for the EOD field
+        next_code += 1
+        if next_code == (1 << width) - 1 and width < 12:
+            width += 1
+    emit(257, width)
+    if nbits:
+        out.append((bitbuf << (8 - nbits)) & 0xFF)
+    return bytes(out)
+
+
 def make_structural_pdf(page_bodies: list[str]) -> bytes:
     """A REAL PDF 1.5 object graph (how modern producers write files):
     top-level catalog, the page tree (/Pages node + /Type /Page dicts)
@@ -592,9 +643,7 @@ def make_pdf_bytes(text: str, doc_id: int = 1) -> bytes:
         raw = body.encode("latin-1")
         form = doc_id % 240
         if form == 100:
-            from textextraction_spark.operators.tiff import lzw_encode
-
-            payload, filt = lzw_encode(raw), b"/LZWDecode"
+            payload, filt = _lzw_encode(raw), b"/LZWDecode"
         elif form == 160:
             import base64
 
