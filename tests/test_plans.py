@@ -65,11 +65,20 @@ class TestJoinStrategies:
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
 
-    def test_anti_join_resume_is_broadcastable(self, spark):
-        """The checkpoint anti-join must not devolve into a cartesian."""
-        from textextraction_spark.functions.relational import j2_anti_join_resume
+    def test_pending_anti_join_is_not_cartesian(self, spark, stored_pages, tmp_path):
+        """The resume anti-join the job runs (committed urls vs the
+        pages) stays a keyed LeftAnti join: a cartesian here would be
+        quadratic in the committed set."""
+        from textextraction_spark.io.checkpoint import CheckpointCatalog
+        from textextraction_spark.plans.pipeline import JobConfig, run_extraction_job
 
-        plan = plan_of(j2_anti_join_resume(spark, "/root/testdata/sf0.001"))
+        root = str(tmp_path / "ckpt")
+        cfg = JobConfig(checkpoint_root=root, batch_id="b0", num_partitions=2)
+        run_extraction_job(spark, stored_pages.limit(20), cfg)
+        pending = CheckpointCatalog(root).pending(
+            stored_pages.select("url", "warc_ts", "html"), spark
+        )
+        plan = plan_of(pending)
         assert "LeftAnti" in plan
         assert "CartesianProduct" not in plan
 
