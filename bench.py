@@ -19,7 +19,7 @@ session is perfbench's (``perfbench.run.start_spark``) at
    ``throughput`` comes from their metrics rows.  bench.py exits
    non-zero when a job commits another number of docs than the table
    holds, or reports ``n_err`` > 0.
-3. The seven headline ``__spark_entry__.queries()``: one untimed warm-up
+3. The six headline ``__spark_entry__.queries()``: one untimed warm-up
    query, then the faster of two ``.count()`` runs each.
 
 The stdout line carries ``metric``, ``value``, ``unit``, ``queries``,
@@ -47,7 +47,6 @@ HEADLINE_QUERIES = (
     "ann_brute_force_topk",
     "text_profile",
     "doc_quality_signals",
-    "q1_pricing_summary",
 )
 TIMED_JOBS = 3
 # Replaces perfbench's JVM options: C1 only as there, but with a larger

@@ -19,10 +19,7 @@ def connect_duckdb(sf_dir: str):
     import duckdb
 
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
+    for t in ("events", "documents", "embeddings"):
         con.execute(
             f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')"
         )

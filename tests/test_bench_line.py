@@ -19,7 +19,7 @@ LINE_KEYS = ("metric", "value", "unit", "queries", "sf", "throughput")
 
 def test_compact_line_fits_driver_tail():
     queries = {name: 1234567.891 for name in ("extract_e2e", *bench.HEADLINE_QUERIES)}
-    assert len(queries) == 8
+    assert len(queries) == 7
     throughput = {
         "n_docs": 123456789,
         "mb": 123456789.1,

@@ -1,7 +1,7 @@
 """Composite-coherence pins (round 3).
 
 The driver gates at most 50 queries and ``__spark_entry__.queries()``
-holds 48, so operator pairs sharing a table or shuffle are gated as
+holds 35, so operator pairs sharing a table or shuffle are gated as
 composites.  These tests pin the claim that makes the consolidation
 lossless: every STANDALONE operator's output equals its exact slice of
 the gated composite — so a green composite row certifies each
@@ -144,30 +144,6 @@ class TestDocQualitySlices:
         )
         assert_df_equal(CL.quality_classifier(spark, SF), comp)
 
-    def test_asof_slice(self, spark):
-        from pyspark.sql import functions as F
-
-        from textextraction_spark.functions import analytics as A
-
-        comp = (
-            E.queries()["event_joins"](spark, SF)
-            .filter(F.col("tag") == "asof")
-            .select("event_id", "user_id", "ts", "last_click_ts")
-        )
-        assert_df_equal(A.asof_last_click(spark, SF), comp)
-
-    def test_band_slice(self, spark):
-        from pyspark.sql import functions as F
-
-        from textextraction_spark.functions import analytics as A
-
-        comp = (
-            E.queries()["event_joins"](spark, SF)
-            .filter(F.col("tag") == "band")
-            .select("band", "n", "sum_value")
-        )
-        assert_df_equal(A.band_range_join(spark, SF), comp)
-
     def test_bpe_slices_equal_standalone(self, spark):
         from pyspark.sql import functions as F
 
@@ -279,167 +255,6 @@ class TestDocQualitySlices:
             for r in C.decontaminate(spark, SF).collect()
         }
         assert got == want
-
-
-class TestRelationalSlices:
-    def test_project_gates_slices(self, spark):
-        """Round-5 rotation: events_project + p3_keyword_gate gate as
-        ONE tag-union row; each tag must equal its standalone operator
-        (and events_project's own constituents stay pinned through it)."""
-        from pyspark.sql import functions as F
-
-        from textextraction_spark.functions import relational as R
-
-        comp = E.queries()["project_gates"](spark, SF)
-        ev = comp.filter(F.col("tag") == "event_project")
-        assert_df_equal(
-            R.events_project(spark, SF),
-            ev.select("event_id", "props_clean", "k_value"),
-        )
-        assert_df_equal(
-            R.p1_strip_special(spark, SF), ev.select("event_id", "props_clean")
-        )
-        assert_df_equal(
-            R.f_json_extract(spark, SF), ev.select("event_id", "k_value")
-        )
-        assert_df_equal(
-            R.p3_keyword_gate(spark, SF),
-            comp.filter(F.col("tag") == "doc_gate").select("doc_id", "lang"),
-        )
-
-    def test_rank_suite_slices(self, spark):
-        """Round-5 rotation: w1_topk_per_group + s1_top_orders."""
-        from pyspark.sql import functions as F
-
-        from textextraction_spark.functions import relational as R
-
-        comp = E.queries()["rank_suite"](spark, SF)
-        assert_df_equal(
-            R.w1_topk_per_group(spark, SF),
-            comp.filter(F.col("tag") == "topk_events").select(
-                "event_type", "rk", "event_id", "value"
-            ),
-        )
-        assert_df_equal(
-            R.s1_top_orders(spark, SF),
-            comp.filter(F.col("tag") == "top_orders").select(
-                "o_orderkey", "o_totalprice"
-            ),
-        )
-
-    def test_a1_type_stats_slices(self, spark):
-        from textextraction_spark.functions import analytics as A
-        from textextraction_spark.functions import relational as R
-
-        comp = E.queries()["a1_type_stats"](spark, SF)
-        assert_df_equal(
-            R.a1_avg_by_group(spark, SF),
-            comp.select("event_type", "n", "avg_value", "sum_value"),
-        )
-        assert_df_equal(
-            A.pctl_value_by_type(spark, SF),
-            comp.select("event_type", "p25", "p50", "p75"),
-        )
-
-    def test_user_event_profile_slices(self, spark):
-        from pyspark.sql import functions as F
-
-        from textextraction_spark.functions import relational as R
-
-        comp = E.queries()["user_event_profile"](spark, SF)
-        assert_df_equal(
-            R.a2_first_event_per_user(spark, SF),
-            comp.select(
-                "user_id",
-                F.col("first_event_id").alias("event_id"),
-                F.col("first_event_type").alias("event_type"),
-            ),
-        )
-        assert_df_equal(
-            R.a4_collect_per_group(spark, SF),
-            comp.select("user_id", "types_sorted", "n"),
-        )
-
-
-class TestAnalyticSlices:
-    def test_window_analytics_slices(self, spark):
-        from textextraction_spark.functions import analytics as A
-
-        comp = E.queries()["window_analytics"](spark, SF)
-        assert_df_equal(
-            A.w2_lag_moving_avg(spark, SF),
-            comp.select("event_id", "user_id", "delta_prev", "mavg3"),
-        )
-        assert_df_equal(
-            A.w4_ntile_rank(spark, SF),
-            comp.select("event_id", "event_type", "decile", "pct_rank"),
-        )
-
-    def test_sql_surface_suite_slices(self, spark):
-        """Late-round-5 rotation: the retired standalone composites
-        (grouping_multi, set_ops) stay pinned equal to their branch
-        slices of the merged driver row."""
-        from pyspark.sql import functions as F
-
-        from textextraction_spark.functions import analytics as A
-
-        comp = E.queries()["sql_surface_suite"](spark, SF)
-        gm = comp.filter(
-            F.col("branch").isin("rollup", "cube")
-        ).select(
-            F.col("branch").alias("shape"),
-            "event_type",
-            "k2",
-            "n",
-            "sum_value",
-        )
-        assert_df_equal(A.grouping_multi(spark, SF), gm)
-        so = comp.filter(
-            F.col("branch").isin("except", "intersect")
-        ).select(
-            F.col("branch").alias("op"),
-            "user_id",
-            "event_type",
-            "value_bucket",
-        )
-        assert_df_equal(A.set_ops(spark, SF), so)
-
-    def test_grouping_multi_branches(self, spark):
-        from pyspark.sql import functions as F
-
-        from textextraction_spark.functions import analytics as A
-
-        comp = A.grouping_multi(spark, SF)
-        roll = comp.filter(F.col("shape") == "rollup").select(
-            "event_type", F.col("k2").alias("day"), "n", "sum_value"
-        )
-        assert_df_equal(A.rollup_daily_counts(spark, SF), roll)
-        cube = comp.filter(F.col("shape") == "cube").select(
-            "event_type",
-            F.when(F.col("k2") == "ALL", -1)
-            .otherwise(F.col("k2").cast("bigint"))
-            .alias("value_bucket"),
-            "n",
-        )
-        assert_df_equal(A.cube_type_bucket(spark, SF), cube)
-
-    def test_set_ops_branches(self, spark):
-        from pyspark.sql import functions as F
-
-        from textextraction_spark.functions import analytics as A
-        from textextraction_spark.functions import relational as R
-
-        comp = A.set_ops(spark, SF)
-        assert_df_equal(
-            R.set_except_types(spark, SF),
-            comp.filter(F.col("op") == "except").select(
-                "user_id", "event_type", "value_bucket"
-            ),
-        )
-        assert_df_equal(
-            A.intersect_types(spark, SF),
-            comp.filter(F.col("op") == "intersect").select("user_id", "event_type"),
-        )
 
 
 class TestOperatorFamilyBranches:

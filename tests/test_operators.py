@@ -26,21 +26,10 @@ FAST_SUBSET = [
     "scored_selection",
     "semdedup_suite",
     "politeness_schedule",
-    "a1_type_stats",
-    "user_event_profile",
-    "project_gates",
-    "j1_broadcast_join",
-    "rank_suite",
     "pq_suite",
     "host_pagerank",
     "exact_substr_dedup",
-    "q1_pricing_summary",
-    "window_analytics",
-    "sql_surface_suite",
     "extract_any_docs",
-    "event_joins",
-    "pivot_user_type_counts",
-    "sessionize_batch",
     "bpe_suite",
 ]
 

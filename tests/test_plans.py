@@ -58,13 +58,6 @@ class TestExtractionPlan:
 
 
 class TestJoinStrategies:
-    def test_dimension_join_broadcasts(self, spark):
-        from textextraction_spark.functions.relational import j1_broadcast_join
-
-        plan = plan_of(j1_broadcast_join(spark, "/root/testdata/sf0.001"))
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
-
     def test_pending_anti_join_is_not_cartesian(self, spark, stored_pages, tmp_path):
         """The resume anti-join the job runs (committed urls vs the
         pages) stays a keyed LeftAnti join: a cartesian here would be
@@ -81,67 +74,6 @@ class TestJoinStrategies:
         plan = plan_of(pending)
         assert "LeftAnti" in plan
         assert "CartesianProduct" not in plan
-
-    def test_band_join_is_broadcast_nested_loop(self, spark):
-        """Interval join: 5-row build side must broadcast — a shuffled
-        theta join here would be quadratic at scale."""
-        from textextraction_spark.functions.analytics import band_range_join
-
-        plan = plan_of(band_range_join(spark, "/root/testdata/sf0.001"))
-        assert "BroadcastNestedLoopJoin" in plan
-        assert "CartesianProduct" not in plan
-        assert "SortMergeJoin" not in plan
-
-    def test_asof_join_single_shuffle(self, spark):
-        """The union+window as-of join shuffles ONCE on user_id (plus the
-        final-select exchanges AQE may add reading shuffle output) — and
-        contains no join node at all: the as-of is pure window."""
-        from textextraction_spark.functions.analytics import asof_last_click
-
-        plan = plan_of(asof_last_click(spark, "/root/testdata/sf0.001"))
-        assert "Join" not in plan
-        assert plan.count("Exchange hashpartitioning(user_id") <= 2  # node + Input line
-
-
-class TestBucketing:
-    def test_bucketed_join_has_no_shuffle(self, spark, tmp_path_factory):
-        """Co-located join via bucketBy: both sides bucketed on the join
-        key -> SortMergeJoin with ZERO Exchange.  This is the 100 TB
-        pattern for repeated joins on a stable key (e.g. url-keyed result
-        tables joined across runs): pay the shuffle once at write time,
-        never again at read time."""
-        wh = str(tmp_path_factory.mktemp("warehouse"))
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        left = docs.select("doc_id", "lang")
-        right = docs.select("doc_id", "n_chars")
-        for name, df in (("b_left", left), ("b_right", right)):
-            df.write.bucketBy(8, "doc_id").sortBy("doc_id").option(
-                "path", f"{wh}/{name}"
-            ).mode("overwrite").saveAsTable(name)
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = (
-                spark.table("b_left")
-                .join(spark.table("b_right"), "doc_id")
-                .select("doc_id", "lang", "n_chars")
-            )
-            plan = plan_of(joined)
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, plan
-            assert joined.count() == 500
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-            spark.sql("DROP TABLE IF EXISTS b_left")
-            spark.sql("DROP TABLE IF EXISTS b_right")
-
-    def test_smj_join_strategy(self, spark):
-        """j3 pins the large-large shape: SortMergeJoin, no broadcast of
-        either fact side."""
-        from textextraction_spark.functions.relational import j3_large_join_smj
-
-        plan = plan_of(j3_large_join_smj(spark, "/root/testdata/sf0.001"))
-        assert "SortMergeJoin" in plan
-        assert "BroadcastHashJoin" not in plan
 
 
 class TestCorpusPrepPlan:
@@ -170,9 +102,6 @@ SHUFFLE_BUDGETS = {
     # (all constituent signals fold into one projection), and the ANN
     # composites union two broadcast-bucket lookups (no exchange).
     "text_profile": 0,
-    # round-5 rotation: events_project + p3_keyword_gate union — two
-    # narrow pruned scans, still zero exchanges
-    "project_gates": 0,
     # signals branch stays narrow; the decon branch pays exactly its
     # bounded pair (bench-gram distinct + doc_id hit-count) — the
     # benchmark side is broadcast, corpus text never crosses the wire;
@@ -198,27 +127,11 @@ SHUFFLE_BUDGETS = {
     "corpus_prep_pipeline": 1,
     "dedup_exact": 1,
     "dedup_url_normalize": 1,
-    # round-3 composites: one exchange per constituent shuffle — merging
-    # never ADDED an exchange (a1+percentiles share ONE groupBy;
-    # a2-rank-1 + a4-collect share ONE window shuffle; window/grouping/
-    # set/politeness composites pay one per union branch, exactly what
-    # the standalone pair paid).
-    "a1_type_stats": 1,
-    "user_event_profile": 1,
-    "window_analytics": 2,
-    # grouping_multi (2) + set_ops (3) merged in the late-round-5
-    # rotation; extract_any_docs is a pure narrow pipeline
-    "sql_surface_suite": 5,
+    # extract_any_docs is a pure narrow pipeline
     "extract_any_docs": 0,
+    # round-3 composite: one exchange per union branch, exactly what the
+    # standalone window / grouped-map pair paid
     "politeness_schedule": 2,
-    # round-5 rotation: w1's one window shuffle; s1 stays TakeOrdered
-    "rank_suite": 1,
-    "j1_broadcast_join": 1,
-    "j2_anti_join_resume": 1,
-    # event_joins union: asof's one window shuffle + band's one agg
-    # shuffle (the interval join itself is a BroadcastNestedLoopJoin)
-    "event_joins": 2,
-    "sessionize_batch": 1,
     "w3_tumbling_host_counts": 1,
     # bpe_suite: the STATIC tree repeats the trainer lineage per round
     # (O(K^2) exchange nodes for K=4 merges — 1 corpus word-count agg +
@@ -229,9 +142,6 @@ SHUFFLE_BUDGETS = {
     # word-counted ONCE).  Budget pins the static shape.
     "bpe_suite": 62,
     "host_distribution": 2,
-    "q1_pricing_summary": 2,
-    "pivot_user_type_counts": 2,
-    "j3_large_join_smj": 3,
     "site_template_lines": 2,
     "dedup_simhash": 2,
     # round 2: both dedup ops grew the hot-key guard stages (df-cap /
@@ -428,101 +338,3 @@ class TestShuffleBudgets:
             plan = plan_of(fn(spark, "/root/testdata/sf0.001"))
             assert "Exchange" not in plan, (name, plan)
             assert "MapInPandas" in plan, name
-
-
-class TestAqeSkewJoin:
-    def test_aqe_splits_skewed_join_partition(self, spark):
-        """Runtime skew handling for JOINS (complementing plans/skew.py's
-        salting for the UDF stage): with AQE on, a join partition holding
-        a hot key is split at runtime — the finalized plan carries the
-        skew=true marker on the sort-merge join.  This is the mechanism a
-        1000-executor run relies on when a crawl's hot host reaches a
-        shuffle join, so its activation is pinned here."""
-        from pyspark.sql import functions as F
-
-        saved = {
-            k: spark.conf.get(k, None)
-            for k in (
-                "spark.sql.autoBroadcastJoinThreshold",
-                "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-                "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            )
-        }
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB"
-        )
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
-        try:
-            left = spark.range(0, 200_000).select(
-                F.when(F.col("id") % 5 < 4, 0)
-                .otherwise(F.col("id") % 1000)
-                .alias("k"),
-                F.concat(F.lit("payload-"), F.col("id")).alias("v"),
-            )
-            right = spark.range(0, 1000).select(
-                F.col("id").alias("k"), F.lit("dim").alias("d")
-            )
-            j = left.join(right, "k")
-            assert len(j.collect()) == 200_000
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "isFinalPlan=true" in plan
-            assert "skew=true" in plan, "AQE did not split the skewed partition"
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-
-
-class TestRuntimeBloomFilterJoin:
-    def test_selective_dim_injects_bloom_filter_on_fact_scan(self, spark, tmp_path):
-        """Catalyst's runtime bloom-filter join: a selective filter on one
-        join side injects a bloom-filter predicate into the OTHER side's
-        scan, pruning fact rows before the shuffle.  At 100 TB this is
-        the difference between shuffling the whole fact table and
-        shuffling the ~matching slice; pinned here so a conf or plan
-        regression is caught."""
-        from pyspark.sql import functions as F
-
-        saved = {
-            k: spark.conf.get(k, None)
-            for k in (
-                "spark.sql.autoBroadcastJoinThreshold",
-                "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-                "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            )
-        }
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB"
-        )
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-            "1KB",
-        )
-        try:
-            d = str(tmp_path)
-            spark.range(0, 200_000).select(
-                F.col("id").alias("k"),
-                F.concat(F.lit("v"), F.col("id")).alias("v"),
-            ).write.mode("overwrite").parquet(d + "/fact")
-            spark.range(0, 200_000).select(
-                F.col("id").alias("k"), (F.col("id") % 100).alias("cat")
-            ).write.mode("overwrite").parquet(d + "/dim")
-            fact = spark.read.parquet(d + "/fact")
-            dim = spark.read.parquet(d + "/dim").filter(F.col("cat") == 7)
-            j = fact.join(dim, "k")
-            assert j.count() == 2000
-            ex = j._jdf.queryExecution().executedPlan().toString()
-            assert "might_contain" in ex.lower(), "bloom filter not injected"
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)

@@ -17,10 +17,6 @@ import re
 # Keep chars: word chars, whitespace, and ( # - @ & $ : / . , | )
 SPECIAL_CHARS = re.compile(r"[^\w\s(#\-@&$:\/.,|)]")
 
-# The same pattern in Spark SQL / DuckDB dialect (RE2/Java compatible —
-# no lookarounds needed here).
-SPECIAL_CHARS_SQL = r"[^\w\s(#\-@&$:\/.,|)]"
-
 
 def remove_special_characters(s: str) -> str:
     """Drop characters outside the keep-set, then right-trim whitespace."""

@@ -192,9 +192,7 @@ def extract_any_docs(spark, sf_dir: str):
     fixture families → one content-sniffing extract.  The UDF sees
     ONLY bytes (family provenance never reaches the executor-side
     routing), so a mis-sniff produces oracle-visibly wrong text.
-    DRIVER-gated (late-round rotation: grouping_multi + set_ops
-    merged into sql_surface_suite to free the slot; the gate holds 48
-    of its 50 slots, see __spark_entry__)."""
+    DRIVER-gated (see __spark_entry__.queries())."""
     from pyspark.sql import types as T
 
     from textextraction_spark.job.packaging import ensure_shipped

@@ -1,6 +1,5 @@
 """Grouped-map operator: per-host crawl-politeness scheduling via
-``applyInPandas`` (the batch grouped-map surface; the stateful streaming
-twin of this family lives in streaming/stateful.py).
+``applyInPandas`` (the batch grouped-map surface).
 
 Semantics: fetches arrive per host at ``ts``; each fetch may START no
 earlier than ``MIN_DELAY`` after the previous fetch's start —
