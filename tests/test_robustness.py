@@ -1,15 +1,21 @@
 """Robustness at the Spark boundary: Arrow batch caps with multi-MB
-documents, packaging zip integrity (SURVEY.md §7.4.4)."""
+documents, packaging zip integrity (SURVEY.md §7.4.4), and what a Python
+worker imports and re-reads."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import zipfile
+from pathlib import Path
 
 import pyspark.sql.functions as F
 
 from textextraction_spark.job.extract import extract_pages
-from textextraction_spark.job.packaging import build_zip
+from textextraction_spark.job.packaging import build_zip, ensure_shipped
 
+ROOT = Path(__file__).resolve().parents[1]
 
 class TestLargeDocs:
     def test_multi_mb_docs_stream_through_arrow(self, spark, tmp_path):
@@ -73,15 +79,26 @@ class TestPackaging:
         assert "textextraction_spark/resources/persons.txt" in names
         assert not any(n.endswith(".pyc") for n in names)
 
+    def test_script_builds_the_zip_and_each_build_replaces_it(self):
+        """``python textextraction_spark/job/packaging.py`` (job.py's
+        docstring) prints the zip's path; every build renames a new file
+        over it, so a reader never sees it half-written."""
+        out = subprocess.run(
+            [sys.executable, "textextraction_spark/job/packaging.py"],
+            cwd=ROOT, capture_output=True, text=True,
+        )
+        assert out.returncode == 0, out.stderr
+        path = out.stdout.strip()
+        assert zipfile.ZipFile(path).testzip() is None
+        inode = os.stat(path).st_ino
+        assert build_zip() == path
+        assert os.stat(path).st_ino != inode
+
 
 class TestWorkerImports:
     def test_extraction_worker_imports_no_pandas(self):
         """What an extraction worker imports — pyspark.worker, the Arrow
         kernel module and the WARC parser — must not import pandas."""
-        import subprocess
-        import sys
-        from pathlib import Path
-
         code = (
             "import sys, pyspark.worker, textextraction_spark.job.extract, "
             "textextraction_spark.sources.warc\n"
@@ -89,7 +106,111 @@ class TestWorkerImports:
         )
         out = subprocess.run(
             [sys.executable, "-c", code],
-            cwd=Path(__file__).resolve().parents[1],
+            cwd=ROOT,
+            capture_output=True,
+            text=True,
+        )
+        assert out.returncode == 0, out.stderr
+
+
+class TestWorkerZipGuard:
+    def test_reused_worker_rereads_no_spark_archive(self, spark):
+        """Two tasks in one reused worker: the second task's
+        ``setup_spark_files`` re-reads neither pyspark.zip nor the
+        spark-core jar.  A worker environment variable gives these
+        one-partition jobs their own worker pool, so the second task runs
+        in the worker the first one left idle."""
+
+        # each task drains its input: a worker that leaves input unread
+        # exits instead of going back to the pool
+        def first(rows):
+            list(rows)
+            import collections
+            import zipimport
+
+            import textextraction_spark  # noqa: F401  (installs the guard)
+
+            reads = collections.Counter()
+            read = zipimport._read_directory
+
+            def counting(archive):
+                reads[os.path.basename(archive)] += 1
+                return read(archive)
+
+            zipimport._read_directory = counting
+            zipimport.reads_since_first_task = reads
+            importers = collections.Counter(
+                os.path.basename(f.archive)
+                for f in sys.path_importer_cache.values()
+                if isinstance(f, zipimport.zipimporter)
+            )
+            return [(os.getpid(), dict(importers))]
+
+        def second(rows):
+            list(rows)
+            import zipimport
+
+            return [(os.getpid(), dict(zipimport.reads_since_first_task))]
+
+        ensure_shipped(spark)
+        sc = spark.sparkContext
+        sc.environment["TEXTEXTRACTION_ZIP_GUARD_TEST"] = "1"
+        try:
+            [(pid1, importers)] = sc.parallelize([0], 1).mapPartitions(first).collect()
+            [(pid2, reads)] = sc.parallelize([0], 1).mapPartitions(second).collect()
+        finally:
+            del sc.environment["TEXTEXTRACTION_ZIP_GUARD_TEST"]
+        assert pid2 == pid1, "the second task did not reuse the first task's worker"
+        assert importers.get("pyspark.zip", 0) > 1, importers
+        spark_reads = {
+            a: n for a, n in reads.items() if a == "pyspark.zip" or a.startswith("spark-core")
+        }
+        assert not spark_reads, (spark_reads, importers)
+
+    def test_changed_archive_is_reread(self, tmp_path):
+        """The guard skips the re-read of an unchanged archive, and re-reads
+        one that was replaced (new inode) or rewritten in place (new size).
+        Runs in a subprocess so this process keeps stock zipimport."""
+        code = r"""
+import collections, importlib, os, sys, zipfile, zipimport
+archive = os.path.join(sys.argv[1], "mods.zip")
+
+def write(path, modules):
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(name + ".py", src)
+
+write(archive, {"alpha": "X = 1\n"})
+sys.path.insert(0, archive)
+import alpha
+reads = collections.Counter()
+read = zipimport._read_directory
+def counting(path):
+    reads[path] += 1
+    return read(path)
+zipimport._read_directory = counting
+
+from textextraction_spark.job.packaging import install_zip_guard
+install_zip_guard()
+install_zip_guard()
+importlib.invalidate_caches()
+importlib.invalidate_caches()
+assert reads[archive] == 0, reads
+
+write(archive + ".tmp", {"alpha": "X = 1\n", "beta": "Y = 2\n"})
+os.replace(archive + ".tmp", archive)
+importlib.invalidate_caches()
+import beta
+assert beta.Y == 2 and reads[archive] == 1, reads
+
+write(archive, {"alpha": "X = 1\n", "beta": "Y = 2\n", "gamma": "Z = 3\n"})
+importlib.invalidate_caches()
+import gamma
+assert gamma.Z == 3 and reads[archive] == 2, reads
+"""
+        out = subprocess.run(
+            [sys.executable, "-c", code, str(tmp_path)],
+            cwd=ROOT,
             capture_output=True,
             text=True,
         )

@@ -10,7 +10,8 @@ pipeline, see /root/reference) as stateless, vectorized Spark transforms:
                  the single source of truth for extraction semantics, shared
                  by the Spark UDFs, the test oracle, and the golden fixtures.
 - ``job/``       the Spark face of the kernel: schemas, the ``mapInArrow``
-                 extraction operator, executor packaging.
+                 extraction operator, executor packaging and the worker
+                 zip guard.
 - ``plans/``     the end-to-end extraction job (scan -> prune -> checkpoint
                  anti-join -> salted repartition -> extract -> sink +
                  lineage metrics), the one path batch and streaming share.
@@ -33,4 +34,15 @@ Everything here derives from public knowledge only: the Apache Spark /
 PySpark API and the reference repo's observable behavior.
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+# Inside an executor's Python worker, stop the per-task re-read of Spark's
+# zip archives (job/packaging.py).  Drivers, tests and notebooks keep stock
+# zipimport.
+_files = sys.modules.get("pyspark.core.files")
+if _files is not None and _files.SparkFiles._is_running_on_worker:
+    from textextraction_spark.job.packaging import install_zip_guard
+
+    install_zip_guard()
