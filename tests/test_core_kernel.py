@@ -437,6 +437,23 @@ class TestParserParity:
             parse_blocks(html, "stdlib")
         )
 
+    def test_scanner_fault_is_an_error_not_partial_text(self, monkeypatch):
+        """A fast-scanner fault after some blocks reached the sink must
+        surface as the row's error with empty text, never as a row whose
+        text is a prefix of the page and whose error is empty."""
+        from textextraction_spark.core import dom
+
+        def faulty_scan(data, sink):
+            sink.start("p")
+            sink.text("partial words here")
+            sink.end("p")
+            raise RuntimeError("scanner fault")
+
+        monkeypatch.setattr(dom, "_scan_fast", faulty_scan)
+        r = extract_document(b"<p>x</p>")
+        assert r.error == "RuntimeError: scanner fault"
+        assert r.extracted_text == ""
+
 
 class TestExtendedDateGrammar:
     """D3 (ISO) and D4 (day-first) additions to the frozen grammar."""

@@ -22,18 +22,11 @@ ENTRY_POINTS = ("__spark_entry__", "job")
 # MERGE_SQL is pinned by tests/test_merge_semantics.py.
 UNREACHED = {
     f"{PKG}.io.catalog",
-    f"{PKG}.operators.bmp",
     f"{PKG}.operators.chunking",
     f"{PKG}.operators.domains",
-    f"{PKG}.operators.drift",
-    f"{PKG}.operators.frontier",
-    f"{PKG}.operators.ico",
-    f"{PKG}.operators.jpeg",
     f"{PKG}.operators.keywords",
     f"{PKG}.operators.metadata",
     f"{PKG}.operators.packing",
-    f"{PKG}.operators.png",
-    f"{PKG}.streaming.dedup_stream",
 }
 
 

@@ -21,9 +21,8 @@ pipeline, see /root/reference) as stateless, vectorized Spark transforms:
                  LSH, SimHash, n-gram Jaccard, embedding near-dup),
                  similarity search (brute-force + LSH-bucketed ANN), text
                  analysis (lang-id, quality, tokens, fingerprints),
-                 the office, sheet, feed and page-metadata
-                 extractors behind a content-sniffing dispatch, and
-                 standalone JPEG/PNG/BMP/ICO pixel codecs.
+                 and the office, sheet, feed and page-metadata
+                 extractors behind a content-sniffing dispatch.
 - ``sources/``   deterministic Common-Crawl-style ``pages`` table builder
                  (the BASELINE.json input_hint shape) derived from the
                  driver's ``documents`` parquet.

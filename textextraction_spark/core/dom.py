@@ -302,14 +302,13 @@ def parse_blocks(html_bytes: bytes, engine: str = "fast") -> list[RawBlock]:
     """HTML bytes -> ordered RawBlocks.
 
     Decoding: UTF-8 with latin-1 fallback (crawl data is dirty; never
-    raises).  ``engine="stdlib"`` runs html.parser instead of the fast
-    scanner — same output, used as the equivalence oracle in tests."""
+    raises).  A fault in the fast scanner propagates, so the caller
+    (``extract_document``) records an error instead of a row with
+    partial text.  ``engine="stdlib"`` runs html.parser instead of the
+    fast scanner — same output, used as the equivalence oracle in tests."""
     if engine == "fast":
         sink = BlockSink()
-        try:
-            _scan_fast(html_bytes, sink)
-        except Exception:
-            pass  # never let one bad doc kill a batch
+        _scan_fast(html_bytes, sink)
         return sink.finish()
 
     try:

@@ -21,8 +21,7 @@ Three cross-checks keep complementary bugs from cancelling:
 
 1. **Cross-format pin** — for the same doc_id, ``make_rss`` and
    ``make_atom`` must extract to IDENTICAL item tuples (two date
-   grammars, two envelope walks, one result), the feed analog of the
-   PNG/BMP/TIFF cross-codec pixel pin.
+   grammars, two envelope walks, one result).
 2. **Oracle recompute** — the DuckDB oracle rebuilds titles, links,
    the publication EPOCH (integer arithmetic, independent of both
    Python date parsers), and summaries from the fixture formulas.

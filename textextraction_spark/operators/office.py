@@ -17,8 +17,7 @@ around XML — fully decodable with the standard library:
 
 Both fixture families emit the SAME paragraph text for the same
 doc_id, so two independent container+XML walks must agree character
-for character (the office analog of the PNG/BMP/TIFF cross-codec pin),
-and the DuckDB oracle rebuilds the exact text with string
+for character, and the DuckDB oracle rebuilds the exact text with string
 concatenation + ``string_agg`` in SQL.
 
 Supported envelope (pinned fail-soft): well-formed ZIP with the
