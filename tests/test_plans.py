@@ -75,6 +75,35 @@ class TestJoinStrategies:
         assert "LeftAnti" in plan
         assert "CartesianProduct" not in plan
 
+    def test_empty_checkpoint_folds_the_anti_join_away(self, spark, stored_pages, tmp_path):
+        """With nothing committed, neither ``pending`` nor the job's
+        results write holds a LeftAnti or a Python RDD scan
+        (``ExistingRDD``), which would run as a stage with its own Python
+        worker pool.  The job still issues its three SQL executions:
+        results, commit and metrics."""
+        from textextraction_spark.io.checkpoint import CheckpointCatalog
+        from textextraction_spark.plans.pipeline import JobConfig, run_extraction_job
+
+        root = str(tmp_path / "ckpt")
+        pending = CheckpointCatalog(root).pending(
+            stored_pages.select("url", "warc_ts", "html"), spark
+        )
+        executed = pending._jdf.queryExecution().executedPlan().toString()
+        assert "LeftAnti" not in executed and "ExistingRDD" not in executed, executed
+
+        jsc = spark.sparkContext._jsc.sc()
+        store = spark._jsparkSession.sharedState().statusStore()
+        jsc.listenerBus().waitUntilEmpty()
+        before = store.executionsCount()
+        cfg = JobConfig(checkpoint_root=root, batch_id="b0", num_partitions=2)
+        run_extraction_job(spark, stored_pages.limit(20), cfg)
+        jsc.listenerBus().waitUntilEmpty()
+        execs = store.executionsList(before, store.executionsCount() - before)
+        plans = [execs.apply(i).physicalPlanDescription() for i in range(execs.size())]
+        assert len(plans) == 3, plans
+        [results] = [p for p in plans if "MapInArrow" in p]
+        assert "LeftAnti" not in results and "ExistingRDD" not in results, results
+
 
 class TestCorpusPrepPlan:
     def test_single_shuffle_with_partial_agg(self, spark):

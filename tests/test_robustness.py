@@ -98,12 +98,34 @@ class TestPackaging:
 class TestWorkerImports:
     def test_extraction_worker_imports_no_pandas(self):
         """What an extraction worker imports — pyspark.worker, the Arrow
-        kernel module and the WARC parser — must not import pandas."""
-        code = (
-            "import sys, pyspark.worker, textextraction_spark.job.extract, "
-            "textextraction_spark.sources.warc\n"
-            "assert 'pandas' not in sys.modules, 'pandas imported'\n"
-        )
+        kernel module and the WARC parser — must not import pandas, and
+        neither may building one kernel batch and one WARC parse batch."""
+        code = r"""
+import sys, pyspark.worker, textextraction_spark.job.extract, textextraction_spark.sources.warc
+assert 'pandas' not in sys.modules, 'pandas imported'
+from datetime import datetime, timezone
+import pyarrow as pa
+from textextraction_spark.job.arrow_build import column
+from textextraction_spark.job.extract import extract_batch_arrow
+from textextraction_spark.sources.warc import _parse_file_batches, warc_file_bytes
+ts = datetime(2026, 1, 1, tzinfo=timezone.utc)
+html = b"<p>INVOICE 4329</p><p>TOTAL $1,250.00</p>"
+pages = pa.RecordBatch.from_arrays(
+    [column(["https://x.example/1"], pa.string()),
+     column([ts], pa.timestamp("us", tz="UTC")),
+     column([html], pa.binary())],
+    names=["url", "warc_ts", "html"],
+)
+[out] = extract_batch_arrow(iter([pages]))
+assert out.column("spans").to_pylist()[0], out
+files = pa.RecordBatch.from_arrays(
+    [column([warc_file_bytes([("https://x.example/1", ts, html)])], pa.binary())],
+    names=["content"],
+)
+[parsed] = _parse_file_batches(iter([files]))
+assert parsed.column("html").to_pylist() == [html], parsed
+assert 'pandas' not in sys.modules, 'pandas imported by a batch build'
+"""
         out = subprocess.run(
             [sys.executable, "-c", code],
             cwd=ROOT,
@@ -111,6 +133,58 @@ class TestWorkerImports:
             text=True,
         )
         assert out.returncode == 0, out.stderr
+
+    def test_reused_worker_holds_no_pandas(self, spark, tmp_path):
+        """A real ``extract_pages`` task, then a ``read_warc`` parse task,
+        then a probe, all in one reused worker: its ``sys.modules`` holds
+        both modules and no pandas.  A worker environment variable gives
+        these one-partition jobs their own worker pool."""
+        from datetime import datetime, timezone
+
+        from textextraction_spark.sources.warc import read_warc, warc_file_bytes
+
+        def probe(batches):
+            import pyarrow as pa
+
+            from textextraction_spark.job.arrow_build import column
+
+            for _ in batches:  # drain: a worker with unread input exits
+                pass
+            mods = sys.modules
+            yield pa.RecordBatch.from_arrays(
+                [
+                    column([os.getpid()], pa.int64()),
+                    column([",".join(sorted(m for m in mods if m.split(".")[0] in (
+                        "pandas", "textextraction_spark")))], pa.string()),
+                ],
+                names=["pid", "mods"],
+            )
+
+        ts = datetime(2026, 1, 1, tzinfo=timezone.utc)
+        html = b"<p>INVOICE 4329</p><p>TOTAL $1,250.00</p>"
+        (tmp_path / "warc").mkdir()
+        (tmp_path / "warc" / "a.warc.gz").write_bytes(
+            warc_file_bytes([(f"https://x.example/{i}", ts, html) for i in range(3)])
+        )
+        spark.range(0, 8, 1, 1).select(
+            F.concat(F.lit("https://x.example/"), F.col("id").cast("string")).alias("url"),
+            F.lit(ts).alias("warc_ts"),
+            F.lit(html).alias("html"),
+        ).write.parquet(str(tmp_path / "pages"))
+        pages = spark.read.parquet(str(tmp_path / "pages"))
+        assert pages.rdd.getNumPartitions() == 1
+
+        sc = spark.sparkContext
+        sc.environment["TEXTEXTRACTION_FOOTPRINT_TEST"] = "1"
+        try:
+            assert len(extract_pages(pages).collect()) == 8
+            assert len(read_warc(spark, str(tmp_path / "warc")).collect()) == 3
+            [row] = spark.range(0, 1, 1, 1).mapInArrow(probe, "pid long, mods string").collect()
+        finally:
+            del sc.environment["TEXTEXTRACTION_FOOTPRINT_TEST"]
+        mods = set(row.mods.split(","))
+        assert {"textextraction_spark.job.extract", "textextraction_spark.sources.warc"} <= mods, mods
+        assert not {m for m in mods if m.split(".")[0] == "pandas"}, (row.pid, mods)
 
 
 class TestWorkerZipGuard:

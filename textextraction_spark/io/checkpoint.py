@@ -44,14 +44,18 @@ class CheckpointCatalog:
         )
 
     def committed_urls(self, spark):
-        """DataFrame[url] of every committed url (empty if none)."""
-        from pyspark.sql import types as T
+        """DataFrame[url] of every committed url (empty if none).
+
+        The empty set is an empty ``LocalRelation`` (``limit(0)``), which
+        the optimizer folds away, anti-join included.  An empty
+        ``createDataFrame`` would be a Python RDD: Spark keeps the join
+        against it and runs it as a stage with its own Python worker pool.
+        """
+        from pyspark.sql import functions as F
 
         dirs = [str(self.state_dir / b / "urls") for b in self.committed_batches()]
         if not dirs:
-            return spark.createDataFrame(
-                [], T.StructType([T.StructField("url", T.StringType(), False)])
-            )
+            return spark.range(1).select(F.lit("").alias("url")).limit(0)
         return spark.read.parquet(*dirs).select("url")
 
     def results(self, spark):

@@ -5,8 +5,10 @@ processes documents in a sequential ``foreach`` (``Worker.cs:102``); here
 each executor thread pulls Arrow batches of (url, html) rows and runs the
 kernel per document — per-document Python amortized per batch, zero
 per-row serialization (no row-at-a-time UDFs anywhere, per input_hint).
-``mapInArrow`` hands the batch over as Arrow on both edges, with no
-pandas conversion; this module does not import pandas.
+``mapInArrow`` hands the batch over as Arrow on both edges, and the
+output columns are built from Arrow buffers (``job/arrow_build.py``), so
+neither importing this module nor running its kernel loads pandas into a
+worker (``pa.array`` would).
 
 Scale notes (100 TB design):
 - The UDF consumes only (url, warc_ts, html): ``extract_pages`` selects
@@ -22,35 +24,32 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+from operator import attrgetter
+
+import pyarrow as pa
+
 from textextraction_spark.core.extract import extract_document
+from textextraction_spark.job.arrow_build import column, list_of_structs
 from textextraction_spark.job.schemas import EXTRACT_OUTPUT_SCHEMA
 
-_SPAN_PA_FIELDS = [
-    ("field", "string"),
-    ("label", "string"),
-    ("text", "string"),
-    ("page", "int32"),
-    ("line", "int32"),
-    ("start", "int32"),
-    ("end", "int32"),
-    ("rect", "string"),
+_SPAN_FIELDS = [
+    ("field", pa.string()),
+    ("label", pa.string()),
+    ("text", pa.string()),
+    ("page", pa.int32()),
+    ("line", pa.int32()),
+    ("start", pa.int32()),
+    ("end", pa.int32()),
+    ("rect", pa.string()),
 ]
-
-
-def _arrow_types():
-    import pyarrow as pa
-
-    span = pa.list_(
-        pa.struct([(n, getattr(pa, t)()) for n, t in _SPAN_PA_FIELDS])
-    )
-    return pa, span
+_span_row = attrgetter(*(name for name, _ in _SPAN_FIELDS))
+_TS_TYPE = pa.timestamp("us", tz="UTC")
 
 
 def extract_batch_arrow(batches, encrypt_phi: bool = False):
     """Iterator[pyarrow.RecordBatch(url, warc_ts, html)] -> extraction
-    results as RecordBatches — no pandas materialization on either edge."""
-    pa, span_type = _arrow_types()
-    ts_type = pa.timestamp("us", tz="UTC")
+    results as RecordBatches, built from Arrow buffers
+    (``job/arrow_build.py``) — no pandas on either edge."""
     for batch in batches:
         n = len(batch)
         if n == 0:
@@ -62,7 +61,7 @@ def extract_batch_arrow(batches, encrypt_phi: bool = False):
             else [None] * n
         )
         texts: list[str] = []
-        spans: list[list[dict]] = []
+        spans: list[list[tuple]] = []
         conf: list[float] = []
         n_lines: list[int] = []
         n_bytes: list[int] = []
@@ -72,7 +71,7 @@ def extract_batch_arrow(batches, encrypt_phi: bool = False):
             b = data if data is not None else b""
             r = extract_document(b, encrypt_phi=encrypt_phi, declared_charset=cs)
             texts.append(r.extracted_text)
-            spans.append([vars(s).copy() for s in r.spans])
+            spans.append(list(map(_span_row, r.spans)))
             conf.append(r.confidence)
             n_lines.append(r.n_lines)
             n_bytes.append(len(b))
@@ -81,14 +80,14 @@ def extract_batch_arrow(batches, encrypt_phi: bool = False):
         yield pa.RecordBatch.from_arrays(
             [
                 batch.column("url"),
-                batch.column("warc_ts").cast(ts_type),
-                pa.array(texts, pa.string()),
-                pa.array(spans, span_type),
-                pa.array(conf, pa.float64()),
-                pa.array(n_lines, pa.int32()),
-                pa.array(n_bytes, pa.int64()),
-                pa.array(is_pdf, pa.bool_()),
-                pa.array(errors, pa.string()),
+                batch.column("warc_ts").cast(_TS_TYPE),
+                column(texts, pa.string()),
+                list_of_structs(spans, _SPAN_FIELDS),
+                column(conf, pa.float64()),
+                column(n_lines, pa.int32()),
+                column(n_bytes, pa.int64()),
+                column(is_pdf, pa.bool_()),
+                column(errors, pa.string()),
             ],
             names=[
                 "url",

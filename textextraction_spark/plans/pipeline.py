@@ -174,9 +174,14 @@ def _write_metrics(spark, catalog, batch_id: str):
             F.sum("n_bytes").alias("bytes_in"),
             F.avg("confidence").alias("avg_confidence"),
         )
-        .orderBy("part_id")
     )
-    metrics.write.mode("overwrite").parquet(
-        str(catalog.root / "metrics" / batch_id)
-    )
-    return metrics
+    # at most num_partitions rows: one sorted file, not a global range
+    # sort (whose sampling costs two more Spark jobs)
+    metrics_dir = str(catalog.root / "metrics" / batch_id)
+    metrics.coalesce(1).sortWithinPartitions("part_id").write.mode(
+        "overwrite"
+    ).parquet(metrics_dir)
+    # what was written, read back: callers that show or collect the
+    # metrics re-run neither the aggregate nor the results read.  The
+    # schema is given, so the read-back starts no schema-inference job.
+    return spark.read.schema(metrics.schema).parquet(metrics_dir)

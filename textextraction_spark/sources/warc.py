@@ -326,6 +326,8 @@ def iter_warc_records(buf: bytes, record_types: tuple[str, ...] = ("response",))
 def _parse_batches_gen(batches, record_types, payload_name, text_mode):
     import pyarrow as pa
 
+    from textextraction_spark.job.arrow_build import column
+
     ts_type = pa.timestamp("us", tz="UTC")
     payload_type = pa.string() if text_mode else pa.binary()
     # pages carry the envelope's charset label onward (the kernel applies
@@ -334,14 +336,15 @@ def _parse_batches_gen(batches, record_types, payload_name, text_mode):
     with_charset = not text_mode
 
     def flush(urls, tss, payloads, charsets):
+        # buffer-built columns: pa.array would load pandas into the worker
         arrays = [
-            pa.array(urls, pa.string()),
-            pa.array(tss, ts_type),
-            pa.array(payloads, payload_type),
+            column(urls, pa.string()),
+            column(tss, ts_type),
+            column(payloads, payload_type),
         ]
         names = ["url", "warc_ts", payload_name]
         if with_charset:
-            arrays.append(pa.array(charsets, pa.string()))
+            arrays.append(column(charsets, pa.string()))
             names.append("charset")
         return pa.RecordBatch.from_arrays(arrays, names=names)
 
