@@ -16,7 +16,11 @@ from textextraction_spark.core.gazetteer import find_org, find_person
 from textextraction_spark.core.model import rect_to_pdf_points
 from textextraction_spark.core.pdfblocks import parse_pdf
 from textextraction_spark.core.spans import extract_spans
-from textextraction_spark.core.textfilter import remove_special_characters
+from textextraction_spark.core.textfilter import (
+    SPECIAL_CHARS,
+    has_special_characters,
+    remove_special_characters,
+)
 
 
 # ---------------------------------------------------------------- P1 filter
@@ -31,6 +35,11 @@ class TestFilter:
 
     def test_preserves_leading_ws(self):
         assert remove_special_characters("  a! ") == "  a"
+
+    @given(st.text(st.characters(max_codepoint=127)) | st.text())
+    @settings(max_examples=300, deadline=None)
+    def test_has_special_characters_is_the_regex(self, s):
+        assert has_special_characters(s) == (SPECIAL_CHARS.search(s) is not None)
 
 
 # ------------------------------------------------------------- date grammar
@@ -421,6 +430,22 @@ class TestParserParity:
         "<p>caf\xe9 üml</p>".encode("latin-1"),
         b"\x00\xffgarbage<<>>",
         b"<nav><a href=/1>a</a> <a href=/2>b</a></nav><main><p>keep</p></main>",
+        b"<p>a</p><script/><p>after</p>",
+        b"<p>a<script>x</SCRIPT >b</p><p>c</p>",
+        b"<p>a</p><script>var x = 1; <p>never",
+        b"<p><a href=/>home</a> text</p>",
+        b"<p>plain</p><p>bad \xff byte</p><p>more</p>",
+        b"<script><!-- </script><p>close tag inside a comment match</p>",
+        b"<style>a{}</style><p>s</p><script>b</script><p>t</p>",
+        b'<script src="x" /><p>after</p>',
+        b"<script a=/>x</script><p>y</p>",
+        b"<p>a</p><script type=x>b",
+        b"<style media='a>b'>x{}</style><p>s</p>",
+        b"<script/x>y</script><p>z</p>",
+        b"<p>a</p><script>x</style><p>b</p>",
+        b"<scripts>x</scripts><p>y</p>",
+        b"<script a />x</script><p>y</p>",
+        b'<script a="x" />y<p title="z">w</p>',
     ]
 
     @pytest.mark.parametrize("case", CASES)
@@ -436,6 +461,42 @@ class TestParserParity:
         assert _blockkey(parse_blocks(html, "fast")) == _blockkey(
             parse_blocks(html, "stdlib")
         )
+
+    @pytest.mark.parametrize("unit", [b"<script></script>", b"<script><!--</script>"])
+    def test_rawtext_elements_are_tokenized_once(self, monkeypatch, unit):
+        """A 1 MB page of script elements, even ones whose body opens an
+        unterminated comment, is one split of the page with one match
+        per element: no script body is tokenized, and no byte twice."""
+        from textextraction_spark.core import dom
+
+        real = dom._TAG_RE
+        splits = []
+
+        class CountingSplit:
+            def split(self, s, maxsplit=0):
+                out = real.split(s, maxsplit)
+                splits.append((len(s), len(out)))
+                return out
+
+        monkeypatch.setattr(dom, "_TAG_RE", CountingSplit())
+        k = (1 << 20) // len(unit)
+        data = unit * k + b"<p>after</p>"
+        assert [b.text for b in parse_blocks(data, "fast")] == ["after"]
+        # a text chunk, then per match its groups and the chunk after it
+        assert splits == [(len(data), 1 + dom._STRIDE * (k + 2))]
+
+    @pytest.mark.parametrize("matches", [1, 2, 3])
+    def test_split_in_rounds(self, monkeypatch, matches):
+        """A tag-dense page is split a bounded number of matches at a
+        time; rounds of any size give the same blocks."""
+        from textextraction_spark.core import dom
+
+        monkeypatch.setattr(dom, "_SPLIT_MATCHES", matches)
+        extra = [b"<p>a</p><script></script><p>b</p>", SHELL.format(main="<p>a</p>").encode()]
+        for case in self.CASES + extra:
+            assert _blockkey(parse_blocks(case, "fast")) == _blockkey(
+                parse_blocks(case, "stdlib")
+            ), case
 
     def test_scanner_fault_is_an_error_not_partial_text(self, monkeypatch):
         """A fast-scanner fault after some blocks reached the sink must

@@ -105,6 +105,35 @@ class TestJoinStrategies:
         assert "LeftAnti" not in results and "ExistingRDD" not in results, results
 
 
+class TestBatchSparkJobs:
+    def test_every_job_belongs_to_a_batch_execution(self, spark, stored_pages, tmp_path):
+        """Every Spark job a batch starts runs inside one of its three SQL
+        executions (results, commit, metrics), on an empty and on a
+        non-empty checkpoint: no read of the results or of the committed
+        urls infers its schema with a job of its own."""
+        from textextraction_spark.plans.pipeline import JobConfig, run_extraction_job
+
+        tracker = spark.sparkContext.statusTracker()
+        bus = spark.sparkContext._jsc.sc().listenerBus()
+        store = spark._jsparkSession.sharedState().statusStore()
+        root = str(tmp_path / "ckpt")
+        for batch_id, n_pages in (("b0", 20), ("b1", 40)):
+            bus.waitUntilEmpty()
+            jobs_before = set(tracker.getJobIdsForGroup())
+            execs_before = store.executionsCount()
+            cfg = JobConfig(checkpoint_root=root, batch_id=batch_id, num_partitions=2)
+            run_extraction_job(spark, stored_pages.limit(n_pages), cfg)
+            bus.waitUntilEmpty()
+            jobs = set(tracker.getJobIdsForGroup()) - jobs_before
+            execs = store.executionsList(execs_before, store.executionsCount() - execs_before)
+            in_execs = set()
+            for i in range(execs.size()):
+                ids = execs.apply(i).jobs().keys().mkString(",")
+                in_execs |= {int(j) for j in ids.split(",") if j}
+            assert execs.size() == 3, batch_id
+            assert jobs and jobs == in_execs, (batch_id, sorted(jobs), sorted(in_execs))
+
+
 class TestCorpusPrepPlan:
     def test_single_shuffle_with_partial_agg(self, spark):
         """The e2e corpus-prep DAG shuffles exactly once (the dedup

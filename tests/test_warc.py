@@ -6,11 +6,14 @@ zero-shuffle plan shape."""
 import gzip
 from datetime import datetime, timezone
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from textextraction_spark.job.extract import extract_pages
 from textextraction_spark.sources.pages import build_pages
 from textextraction_spark.sources.warc import (
+    _parse_warc_date,
     cdx_lookup,
     iter_warc_records,
     read_warc,
@@ -296,6 +299,59 @@ class TestWarcParser:
         [(url, ts, body, charset)] = list(iter_warc_records(rec))
         got = extract_document(body, declared_charset=charset)
         assert got.extracted_text == "résumé"
+
+
+def _parse_warc_date_oracle(date: str):
+    """``_parse_warc_date`` before its canonical-form fast path."""
+    try:
+        return datetime.strptime(date, "%Y-%m-%dT%H:%M:%SZ").replace(tzinfo=timezone.utc)
+    except ValueError:
+        pass
+    try:
+        return datetime.fromisoformat(date.replace("Z", "+00:00"))
+    except ValueError:
+        return None
+
+
+@st.composite
+def _warc_dates(draw):
+    """WARC-Date strings: canonical, single-digit fields, out-of-range
+    fields, fractional seconds, offsets and other spellings."""
+    ints = st.integers
+    y, mo, d = draw(ints(0, 9999)), draw(ints(0, 19)), draw(ints(0, 39))
+    h, mi, s = draw(ints(0, 29)), draw(ints(0, 69)), draw(ints(0, 69))
+    form = draw(st.sampled_from(["canonical", "single", "fraction", "offset", "lower"]))
+    if form == "single":
+        return f"{y:04d}-{mo}-{d}T{h}:{mi}:{s}Z"
+    date = f"{y:04d}-{mo:02d}-{d:02d}T{h:02d}:{mi:02d}:{s:02d}"
+    if form == "fraction":
+        return date + "." + draw(st.text("0123456789", min_size=1, max_size=7)) + "Z"
+    if form == "offset":
+        return date + draw(st.sampled_from(["+00:00", "-05:30", "+14:00", "+0100"]))
+    if form == "lower":
+        return date.replace("T", "t") + "z"
+    return date + "Z"
+
+
+class TestWarcDate:
+    @given(_warc_dates())
+    @settings(max_examples=600, deadline=None)
+    def test_equals_the_general_parsers(self, date):
+        assert _parse_warc_date(date) == _parse_warc_date_oracle(date)
+
+    @given(st.text(max_size=24))
+    @settings(max_examples=200, deadline=None)
+    def test_any_text(self, date):
+        assert _parse_warc_date(date) == _parse_warc_date_oracle(date)
+
+    def test_fixed_forms(self):
+        for date in (
+            "2026-03-01T12:00:00Z", "2026-3-1T1:2:3Z", "2026-13-01T00:00:00Z",
+            "2026-02-30T00:00:00Z", "2026-01-01T24:00:00Z", "2026-01-01T00:00:60Z",
+            "2026-03-01T12:00:00.123456Z", "2026-03-01T12:00:00+02:00",
+            "2026-03-01T12:00:0١Z", "0000-01-01T00:00:00Z", "",
+        ):
+            assert _parse_warc_date(date) == _parse_warc_date_oracle(date), date
 
 
 class TestCdxIndex:

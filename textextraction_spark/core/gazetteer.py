@@ -70,16 +70,57 @@ def _load(name: str, fallback) -> list[str]:
     return fallback()
 
 
+def _trie(words: list[str]) -> str:
+    """The words as one prefix-factored (trie) alternation.
+
+    It matches what ``"|".join`` over the words sorted longest first
+    matches, at fewer steps per position.  All the words that match at
+    one position are prefixes of one another, and at every trie node the
+    longer continuations are tried before ending there, so the first
+    match the engine finds is the longest word whose trailing assertion
+    holds, which is the sorted alternation's pick too."""
+    root: dict = {}
+    for w in words:
+        node = root
+        for ch in w:
+            node = node.setdefault(ch, {})
+        node[""] = None  # a word ends here
+
+    def alternation(node: dict) -> str:
+        alts = []
+        for ch, child in node.items():
+            if ch:
+                # a single-branch chain folds into one literal run
+                run = re.escape(ch)
+                while child.keys() - {""} and len(child) == 1:
+                    (ch, child), = child.items()
+                    run += re.escape(ch)
+                alts.append(run + alternation(child) if child else run)
+        if not alts:
+            return ""
+        if "" in node:
+            alts.append("")  # ending here is the last resort
+        return alts[0] if len(alts) == 1 else "(?:" + "|".join(alts) + ")"
+
+    return alternation(root)
+
+
 @lru_cache(maxsize=1)
 def person_pattern() -> re.Pattern[str]:
-    names = sorted(_load("persons.txt", generate_person_list), key=len, reverse=True)
-    return re.compile(r"\b(" + "|".join(re.escape(n) for n in names) + r")\b")
+    return re.compile(r"\b(" + _trie(_load("persons.txt", generate_person_list)) + r")\b")
 
 
 @lru_cache(maxsize=1)
 def org_pattern() -> re.Pattern[str]:
-    orgs = sorted(_load("orgs.txt", generate_org_list), key=len, reverse=True)
-    return re.compile(r"(?<!\w)(" + "|".join(re.escape(o) for o in orgs) + r")(?!\w)")
+    return re.compile(r"(?<!\w)(" + _trie(_load("orgs.txt", generate_org_list)) + r")(?!\w)")
+
+
+@lru_cache(maxsize=1)
+def _org_anchors() -> tuple[tuple[str, ...], int]:
+    """The orgs' distinct last words (mostly the legal suffixes), and
+    the longest org's length."""
+    orgs = _load("orgs.txt", generate_org_list)
+    return tuple(dict.fromkeys(o.split()[-1] for o in orgs)), max(map(len, orgs))
 
 
 def find_person(upper_text: str) -> tuple[str, int, int] | None:
@@ -91,6 +132,19 @@ def find_person(upper_text: str) -> tuple[str, int, int] | None:
 
 def find_org(upper_text: str) -> tuple[str, int, int] | None:
     """First ORGANIZATION — generalizes the reference's three hardcoded
-    vendor fixtures (``Worker.cs:299-364``) into lexicon matching."""
-    m = org_pattern().search(upper_text)
+    vendor fixtures (``Worker.cs:299-364``) into lexicon matching.
+
+    Every org ends with one of the lexicon's last words, so a text
+    holding none of them holds no org, and the first org starts at most
+    the longest org's length before the first of them: a few substring
+    scans spare most of the pattern search, on a whole document too."""
+    last_words, longest = _org_anchors()
+    first = -1
+    for w in last_words:
+        at = upper_text.find(w)
+        if at >= 0 and (first < 0 or at < first):
+            first = at
+    if first < 0:
+        return None
+    m = org_pattern().search(upper_text, max(0, first - longest))
     return (m.group(1), m.start(1), m.end(1)) if m else None

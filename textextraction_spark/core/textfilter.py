@@ -21,3 +21,15 @@ SPECIAL_CHARS = re.compile(r"[^\w\s(#\-@&$:\/.,|)]")
 def remove_special_characters(s: str) -> str:
     """Drop characters outside the keep-set, then right-trim whitespace."""
     return SPECIAL_CHARS.sub("", s).rstrip()
+
+
+# The ASCII characters the filter keeps, read off SPECIAL_CHARS itself.
+_ASCII_KEPT = bytes(c for c in range(128) if not SPECIAL_CHARS.match(chr(c)))
+
+
+def has_special_characters(s: str) -> bool:
+    """Whether ``SPECIAL_CHARS`` matches anywhere in ``s``; for ASCII
+    text, a byte-table pass instead of a regex scan."""
+    if s.isascii():
+        return bool(s.encode("ascii").translate(None, _ASCII_KEPT))
+    return SPECIAL_CHARS.search(s) is not None

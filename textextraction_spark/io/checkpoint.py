@@ -24,6 +24,10 @@ import os
 import shutil
 from pathlib import Path
 
+# The url column of the results and of the committed url state.  Reads
+# that give their schema start no schema-inference Spark job.
+URL_SCHEMA = "url string"
+
 
 class CheckpointCatalog:
     """Local filesystem implementation of the commit protocol."""
@@ -56,7 +60,7 @@ class CheckpointCatalog:
         dirs = [str(self.state_dir / b / "urls") for b in self.committed_batches()]
         if not dirs:
             return spark.range(1).select(F.lit("").alias("url")).limit(0)
-        return spark.read.parquet(*dirs).select("url")
+        return spark.read.schema(URL_SCHEMA).parquet(*dirs)
 
     def results(self, spark):
         dirs = [
@@ -91,7 +95,7 @@ class CheckpointCatalog:
         if staging.exists():
             shutil.rmtree(staging)
         spark = extracted_df.sparkSession
-        spark.read.parquet(str(out)).select("url").write.mode("overwrite").parquet(
+        spark.read.schema(URL_SCHEMA).parquet(str(out)).write.mode("overwrite").parquet(
             str(staging / "urls")
         )
         (staging / "_COMMITTED").touch()

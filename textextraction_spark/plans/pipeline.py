@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from textextraction_spark.io.checkpoint import CheckpointCatalog
 from textextraction_spark.job.extract import extract_pages
+from textextraction_spark.job.schemas import EXTRACTED_SCHEMA
 from textextraction_spark.plans.skew import salt_plan, salted_repartition
 
 # Arrow batch sizing: the BYTE cap is the real OOM guard (html rows can be
@@ -149,7 +150,8 @@ def _write_metrics(spark, catalog, batch_id: str):
     """Lineage metrics per partition for a COMMITTED batch (A3 analog:
     the reference logs only a doc count, Worker.cs:98; we record
     count/ok/err/bytes per task), written next to the results."""
-    results = spark.read.parquet(str(catalog.results_dir / batch_id))
+    # the schema is given, so the read starts no schema-inference job
+    results = spark.read.schema(EXTRACTED_SCHEMA).parquet(str(catalog.results_dir / batch_id))
     metrics = (
         results.groupBy("part_id")
         .agg(

@@ -48,6 +48,7 @@ _HTTP_CHARSET = re.compile(
     rb"(?im)^content-type:[^\r\n]*?charset\s*=\s*[\"']?([A-Za-z0-9_.:\-]+)"
 )
 _TS_FMT = "%Y-%m-%dT%H:%M:%SZ"
+_CANONICAL_DATE = re.compile(r"(\d{4})-(\d\d)-(\d\d)T(\d\d):(\d\d):(\d\d)Z", re.ASCII)
 
 # pages-minimal schema: what the extraction kernel consumes.
 WARC_PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, charset string"
@@ -250,6 +251,15 @@ def _parse_headers(raw: bytes) -> dict[str, str]:
 
 
 def _parse_warc_date(date: str) -> datetime | None:
+    # The canonical form (``_TS_FMT``) by one match: strptime costs most
+    # of a record's parse.  Anything else, and an out-of-range field,
+    # takes the general parsers below.
+    m = _CANONICAL_DATE.fullmatch(date)
+    if m:
+        try:
+            return datetime(*map(int, m.groups()), tzinfo=timezone.utc)
+        except ValueError:
+            pass
     try:
         return datetime.strptime(date, _TS_FMT).replace(tzinfo=timezone.utc)
     except ValueError:
